@@ -6,8 +6,8 @@ indexes over immutable HDFS files), re-expressed Spark-first:
 
 - sparse value->file/block indexes become bucketed Parquet postings tables
   (reference: core/indexing/AbstractBlockIndexingJob.java)
-- index-pruned scans become driver-side file pruning feeding
-  ``spark.read.parquet(files)`` plus a Catalyst residual filter
+- index-pruned scans become driver-side file pruning feeding a
+  Parquet read of just those files plus a Catalyst residual filter
   (reference: core/retrieval/BlockIndexedFileInputFormat.java)
 - Lucene text indexes become exploded term-postings Parquet tables
   (reference: lucene/ module)

@@ -53,7 +53,7 @@ def build_ann_index(
     # vector table would make its vectors silently unsearchable with no
     # stale_files() signal)
     files = fsio.list_data_files(spark, table_path)
-    df = spark.read.parquet(table_path)
+    df = fsio.read_parquet(spark, table_path, stats=files)
     centroids = sim.ivf_fit(
         df, vec_column, id_column, k_clusters=nlist, max_iter=max_iter, seed=seed
     )

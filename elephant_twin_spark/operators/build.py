@@ -228,6 +228,13 @@ def postings_for(
 
     ``sample_fraction`` mirrors AbstractSamplingIndexingMapper.java:27-48
     (Bernoulli sampling of indexed records).
+
+    Precondition: every file has ONE raw ``_metadata.file_path``
+    spelling in ``df`` — in practice, ``df`` is a single scan. Rows are
+    grouped on the raw path and canonicalized per group, so a union of
+    scans that spell one file differently (other path forms or
+    percent-encodings) yields one output row per spelling, not one per
+    file.
     """
     src = df.select(
         (key_col if key_col is not None else F.col(column)).cast("string").alias("key"),
@@ -307,7 +314,7 @@ def build_block_index(
     # checksum (stale → full scan). Same ordering in every builder.
     files = fsio.list_data_files(spark, table_path)
     if df is None:
-        df = spark.read.parquet(table_path)
+        df = fsio.read_parquet(spark, table_path, stats=files)
     postings = postings_for(
         df,
         column,
@@ -377,7 +384,12 @@ def zones_for(df: DataFrame, column: str, key_expr: Optional[str] = None) -> Dat
     the ONE definition of the zone aggregation, shared by the full build
     and the incremental refresh (r9 review: the refresh's hand copy had
     already drifted, losing ``key_expr`` support — wrong zones silently
-    prune files the expression actually matches)."""
+    prune files the expression actually matches).
+
+    Precondition: every file has ONE raw ``_metadata.file_path``
+    spelling in ``df`` — in practice, ``df`` is a single scan; a union
+    of scans spelling one file two ways yields two zone rows for it
+    (see :func:`postings_for`)."""
     key = F.expr(key_expr) if key_expr else F.col(column)
     return (
         df.select(
@@ -417,7 +429,7 @@ def build_zone_index(
     idx_dir = catalog.index_dir(index_root, table_path, column, kind="zone")
     # pre-listing: see build_block_index (mid-build file-add race)
     files = fsio.list_data_files(spark, table_path)
-    df = spark.read.parquet(table_path)
+    df = fsio.read_parquet(spark, table_path, stats=files)
     zones = zones_for(df, column, key_expr)
     # stage + publish + lease: see build_block_index
     with fsio.build_lease(spark, idx_dir) as lease_owner:
@@ -437,8 +449,7 @@ def build_zone_index(
 
 
 def read_zones(spark: SparkSession, idx_dir: str) -> DataFrame:
-    fsio.require_published(spark, f"{idx_dir}/zones")
-    return spark.read.parquet(f"{idx_dir}/zones")
+    return fsio.read_parquet(spark, f"{idx_dir}/zones")
 
 
 # --------------------------------------------------------------- bloom index
@@ -493,7 +504,9 @@ def build_bloom_index(
     idx_dir = catalog.index_dir(index_root, table_path, column, kind="bloom")
     # pre-listing: see build_block_index (mid-build file-add race)
     files = fsio.list_data_files(spark, table_path)
-    sketch = bloom_sketch_for(spark.read.parquet(table_path), column, num_bits, num_hashes)
+    sketch = bloom_sketch_for(
+        fsio.read_parquet(spark, table_path, stats=files), column, num_bits, num_hashes
+    )
     # stage + publish + lease: see build_block_index
     with fsio.build_lease(spark, idx_dir) as lease_owner:
         sketch.coalesce(1).write.mode("overwrite").parquet(f"{idx_dir}/sketch.staging")
@@ -519,7 +532,12 @@ def bloom_sketch_for(
 ) -> DataFrame:
     """Per-file Bloom bit arrays ``(file, bits)`` for a file-source read
     (must expose ``_metadata``); also used by incremental refresh on a
-    delta of new files only."""
+    delta of new files only.
+
+    Precondition: every file has ONE raw ``_metadata.file_path``
+    spelling in ``df`` — in practice, ``df`` is a single scan; a union
+    of scans spelling one file two ways yields two sketch rows for it
+    (see :func:`postings_for`)."""
     n_words = num_bits // 64
     key = F.col(column).cast("string")
     src = df.select(
@@ -557,8 +575,7 @@ def bloom_sketch_for(
 
 
 def read_bloom_sketch(spark: SparkSession, idx_dir: str) -> DataFrame:
-    fsio.require_published(spark, f"{idx_dir}/sketch")
-    return spark.read.parquet(f"{idx_dir}/sketch")
+    return fsio.read_parquet(spark, f"{idx_dir}/sketch")
 
 
 def build_block_indexes(
@@ -604,5 +621,4 @@ def build_block_indexes(
 def read_postings(spark: SparkSession, idx_dir: str) -> DataFrame:
     """The index as a first-class table (reference S10: index files are
     themselves scannable input, core/retrieval/ScanUsingIndexJob.java:163-240)."""
-    fsio.require_published(spark, f"{idx_dir}/postings")
-    return spark.read.parquet(f"{idx_dir}/postings")
+    return fsio.read_parquet(spark, f"{idx_dir}/postings")

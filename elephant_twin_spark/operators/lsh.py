@@ -160,7 +160,7 @@ def build_lsh_index(
     idx_dir = catalog.index_dir(index_root, table_path, text_column, kind="lsh")
     # pre-listing: see build.build_block_index (mid-build file-add race)
     files = fsio.list_data_files(spark, table_path)
-    df = spark.read.parquet(table_path)
+    df = fsio.read_parquet(spark, table_path, stats=files)
     bands = banded_docs(
         df, text_column, id_column,
         num_perm=num_perm, num_bands=num_bands, shingle_k=shingle_k, hash_fn=hash_fn,
@@ -227,8 +227,7 @@ class LshIndex:
         the ``bands_grown`` sibling where the streaming gate lands its
         per-batch idempotent appends (see :meth:`append_docs`; the
         refresh folds grown rows back into the main spine)."""
-        fsio.require_published(self.spark, f"{self.idx_dir}/bands")
-        out = self.spark.read.parquet(f"{self.idx_dir}/bands")
+        out = fsio.read_parquet(self.spark, f"{self.idx_dir}/bands")
         grown_dir = f"{self.idx_dir}/bands_grown"
         if fsio.exists(self.spark, grown_dir):
             grown = self.spark.read.parquet(grown_dir).drop("batch_run")

@@ -11,11 +11,21 @@ interval intersection/union over postings
 Spark-first rebuild: the predicate tree is evaluated against the postings
 tables to a *file set* (AND = set intersection, OR = set union — the
 reference's byte-range guard logic degenerates to set algebra at file
-granularity, SURVEY §2.5), the pruned file list feeds
-``spark.read.parquet(files)``, and the FULL predicate is applied as a
-Catalyst residual filter. Parquet min/max + bloom stats then prune
-row-groups *within* the surviving files, recovering the reference's
-sub-file granularity without custom readers.
+granularity, SURVEY §2.5), the pruned file list — with the stats
+the planner's listing already holds — feeds :func:`fsio.read_parquet`,
+and the FULL predicate is applied as a Catalyst residual filter.
+Parquet min/max + bloom stats then prune row-groups *within* the
+surviving files, recovering the reference's sub-file granularity
+without custom readers.
+
+Warm planning launches no Spark job besides the index probe: the
+index tables and the pruned files are read through
+:func:`fsio.read_parquet`, which reuses the schema Spark inferred for
+the same smallest file instead of running the inference job again (a
+refresh that rewrites an index, or a new smallest file, costs one
+inference on the next read), the way the reference
+reads its MapFile indexes in the client and launches nothing before
+the scan (core/retrieval/BlockIndexedFileInputFormat.java:409-431).
 
 The stored byte ranges ARE used below file granularity — just not as a
 scan filter: AND-predicates intersect each file's posting ranges
@@ -521,7 +531,7 @@ def query(
         # to parquet stats)
         m.scanned_files = m.total_files
         m.scanned_bytes = m.total_bytes
-        return spark.read.parquet(table_path).where(full_filter)
+        return fsio.read_parquet(spark, table_path, stats=live).where(full_filter)
 
     leaves = _collect_leaves(pushed)
     sizes = {p: s for p, s, _ in live}
@@ -567,9 +577,9 @@ def query(
     if not files:
         # reference case (b): empty postings ⇒ zero files read; literal-false
         # filter collapses to an empty LocalRelation under Catalyst
-        return spark.read.parquet(table_path).where(F.lit(False))
+        return fsio.read_parquet(spark, table_path, stats=live).where(F.lit(False))
 
-    return spark.read.parquet(*files).where(full_filter)
+    return fsio.read_parquet(spark, stats=fsio.stats_of(live, files)).where(full_filter)
 
 
 def distinct_keys(
@@ -603,7 +613,7 @@ def distinct_keys(
     )
     if idx.not_covered:
         extra = (
-            spark.read.parquet(*sorted(idx.not_covered))
+            fsio.read_parquet(spark, stats=fsio.stats_of(live, idx.not_covered))
             .select(F.col(column).cast("string").alias("key"))
             .where(F.col("key").isNotNull())
         )
@@ -631,7 +641,7 @@ def zone_min_max(
     maxs = [r["max_v"] for r in fresh if r["max_v"] is not None]
     if idx.not_covered:
         row = (
-            spark.read.parquet(*sorted(idx.not_covered))
+            fsio.read_parquet(spark, stats=fsio.stats_of(live, idx.not_covered))
             .agg(F.min(column).alias("mn"), F.max(column).alias("mx"))
             .first()
         )
@@ -734,7 +744,7 @@ def count(
             return F.col(name)
 
         total += (
-            spark.read.parquet(*residual_files)
+            fsio.read_parquet(spark, stats=fsio.stats_of(live, residual_files))
             .where(predicate.to_column(_resolve))
             .count()
         )

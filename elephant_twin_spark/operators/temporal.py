@@ -395,6 +395,9 @@ def scd2_merge(
             .collect()
         )
         if offenders:
+            # nothing consumes the pin past this raise: free its blocks
+            # now (with no enclosing scope, nothing else ever would)
+            lifecycle.release(touched)
             examples = [
                 {**{k: r[k] for k in keys}, "batch_min_ts": r["_bmin"], "history_max_ts": r["_hmax"]}
                 for r in offenders

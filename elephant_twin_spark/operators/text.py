@@ -395,7 +395,7 @@ def build_text_index(
     idx_dir = catalog.index_dir(index_root, table_path, text_column, kind="text")
     # pre-listing: see build.build_block_index (mid-build file-add race)
     files = fsio.list_data_files(spark, table_path)
-    df = spark.read.parquet(table_path)
+    df = fsio.read_parquet(spark, table_path, stats=files)
     postings = postings_for(df, text_column, doc_id_column, tokenizer)
     # Pin the aggregated postings once: the range-partitioned write's
     # boundary sampling, the write itself, AND the doclens derivation
@@ -472,7 +472,7 @@ def build_text_index(
         build_mod.run_pinned_with_retry(postings, _span)
         # corpus stats from the just-written table, not the doclens
         # lineage: re-evaluating the lineage would re-tokenize the corpus
-        stats = spark.read.parquet(f"{idx_dir}/doclens").agg(
+        stats = fsio.read_parquet(spark, f"{idx_dir}/doclens").agg(
             F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
         ).first()
         desc = catalog.make_descriptor(
@@ -772,6 +772,10 @@ def file_value_sets(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     A lookup "which files contain value v in column c" is then
     ``where(array_contains(c_values, v))`` — file-granularity pruning
     from a table whose row count is the FILE count, not the row count.
+
+    Precondition: every file has ONE raw ``_metadata.file_path``
+    spelling in ``df`` — in practice, ``df`` is a single scan (see
+    :func:`elephant_twin_spark.operators.build.postings_for`).
     """
     aggs = [F.sort_array(F.collect_set(c)).alias(f"{c}_values") for c in columns]
     return (
@@ -837,8 +841,7 @@ class TextIndex:
         return self
 
     def postings(self) -> DataFrame:
-        fsio.require_published(self.spark, f"{self.idx_dir}/postings")
-        return self.spark.read.parquet(f"{self.idx_dir}/postings")
+        return fsio.read_parquet(self.spark, f"{self.idx_dir}/postings")
 
     def doclens(self) -> DataFrame:
         # every doclens consumer (BM25 norms, more_like_this) pairs them
@@ -854,7 +857,7 @@ class TextIndex:
                 [f"{self.idx_dir}/postings", f"{self.idx_dir}/doclens"],
             )
             self._pair_ok = True
-        return self.spark.read.parquet(f"{self.idx_dir}/doclens")
+        return fsio.read_parquet(self.spark, f"{self.idx_dir}/doclens")
 
     def matches(self, query: Union[str, object], scoring: str = "tf") -> DataFrame:
         """``(doc_id, score)`` for all docs matching the boolean query.

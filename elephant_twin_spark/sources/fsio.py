@@ -11,10 +11,12 @@ from __future__ import annotations
 import json
 import posixpath
 import threading
-from typing import Dict, List, Optional, Tuple
+from collections import OrderedDict
+from typing import Dict, List, Optional, Sequence, Tuple
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 # FileStat: (normalized path, size bytes, mtime epoch-millis)
 FileStat = Tuple[str, int, int]
@@ -231,9 +233,9 @@ def require_published(spark: SparkSession, final_dir: str) -> None:
     reader would otherwise hit says none of that (r9 verdict item 6).
     Raises ``FileNotFoundError`` naming the recovery; a missing dir
     with NO staged sibling falls through to the reader's normal error.
-    One ``exists()`` metadata call on the happy path — the same order
-    of driver-side cost as the descriptor read every index query
-    already performs."""
+    :func:`read_parquet` calls it only once its listing of the
+    directory has failed, so a published index table pays nothing
+    extra; direct callers pay one ``exists()`` metadata call."""
     if exists(spark, final_dir):
         return
     for tmp_dir in (
@@ -256,6 +258,136 @@ def require_published(spark: SparkSession, final_dir: str) -> None:
                 "mid-write): there is no recoverable copy — re-run the "
                 "build/refresh to rebuild the index."
             )
+
+
+# --------------------------------------------------------------- parquet reads
+#
+# ``spark.read.parquet`` infers the schema with a Spark job. With
+# ``mergeSchema`` off, that job reads one footer: the lexicographically
+# smallest data file's (ParquetUtils.splitFiles sorts the listing by
+# path). The inferred schema is therefore a function of that file and of
+# the session confs that steer footer→schema conversion, and a schema
+# remembered under the file's FileStat — the (path, size, mtime)
+# identity catalog.fresh_files already trusts for index freshness — is
+# the one Spark would infer again.
+
+#: session confs read by Spark's parquet footer→schema conversion
+_SCHEMA_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.variant.allowReadingShredded",
+)
+_MERGE_SCHEMA_CONF = "spark.sql.parquet.mergeSchema"
+#: process-wide, least recently used out first. Sharing is safe: an
+#: entry is a function of its key alone, so no caller can change what
+#: another reads.
+SCHEMA_CACHE_ENTRIES = 512
+_SCHEMAS: "OrderedDict[tuple, object]" = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, stats: Optional[Sequence[FileStat]] = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` minus the schema-inference job
+    when the schema of the same smallest data file was inferred before.
+
+    Three call shapes:
+
+    * ``read_parquet(spark, idx_dir)`` — one of the package's own
+      published index tables. The directory is listed here
+      (:func:`_first_data_file`); when the listing fails,
+      :func:`require_published` names an in-flight or crashed publish
+      before Spark raises its own path-not-found.
+    * ``read_parquet(spark, table_path, stats=live)`` — a directory
+      whose data files the caller has already listed.
+    * ``read_parquet(spark, stats=files)`` — exactly the files in
+      ``files`` (a pruned scan, a refresh delta).
+
+    Plain inference runs on a miss, for zero files (raising Spark's
+    own error) and under ``spark.sql.parquet.mergeSchema=true`` (every
+    footer counts then). Only reads without partition columns are
+    remembered; a hit on a partitioned directory still infers its
+    partition columns from the layout, as Spark does. Outside the key:
+    Parquet summary files (``_common_metadata``, written only when
+    ``parquet.summary.metadata.level`` is set), a data file that also
+    stores a column named like its partition directory (Spark's writer
+    never does), and a file landing in a directory between the caller's
+    listing and this read — the window a build's pre-listing already
+    has."""
+    if stats is None:
+        (path,) = paths
+        try:
+            first = _first_data_file(spark, path)
+        except Py4JError:  # missing or unlistable: diagnosed, else Spark's error
+            require_published(spark, path)
+            return spark.read.parquet(path)
+        stats = [first] if first is not None else []
+    elif not paths:
+        paths = tuple(p for p, _, _ in stats)
+    confs = tuple(spark.conf.get(k, None) for k in (_MERGE_SCHEMA_CONF, *_SCHEMA_CONFS))
+    if not stats or str(confs[0]).lower() == "true":
+        return spark.read.parquet(*paths)
+    key = (min(stats), confs)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    return _infer_and_remember(spark, paths, key)
+
+
+def _first_data_file(spark: SparkSession, path: str) -> Optional[FileStat]:
+    """FileStat of the smallest visible entry directly under ``path``
+    when that entry is a file: the smallest data file of the tree, so
+    the one whose footer Spark infers the schema from. None when there
+    is no visible entry, or when it is a directory (a partitioned
+    layout, which is never remembered). One listing plus two py4j calls
+    per entry, where :func:`list_data_files` needs eight — the listing
+    runs on every index-table read."""
+    fs, jpath, jvm = _fs_and_path(spark, path)
+    listed = fs.listStatus(jpath)
+    entries = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(listed)
+    names = [entries[i].toString() for i in range(len(entries))]
+    visible = [i for i, n in enumerate(names) if _is_data_file(posixpath.basename(n))]
+    if not visible:
+        return None
+    i = min(visible, key=names.__getitem__)
+    st = listed[i]
+    if st.isDirectory():
+        return None
+    return normalize_path(names[i]), int(st.getLen()), int(st.getModificationTime())
+
+
+def stats_of(stats: Sequence[FileStat], paths) -> List[FileStat]:
+    """The entries of ``stats`` whose path is in ``paths``, in listing
+    order — the ``stats=`` argument for a read of a listed subset."""
+    wanted = set(paths)
+    return [st for st in stats if st[0] in wanted]
+
+
+def _infer_and_remember(spark: SparkSession, paths: Sequence[str], key: tuple) -> DataFrame:
+    """The plain read; its schema is remembered under ``key`` when the
+    relation has no partition columns."""
+    df = spark.read.parquet(*paths)
+    try:
+        relation = df._jdf.queryExecution().analyzed().relation()
+        if not relation.partitionSchema().isEmpty():
+            return df
+    except Py4JError:  # an unexpected plan shape is just not remembered
+        return df
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+        while len(_SCHEMAS) > SCHEMA_CACHE_ENTRIES:
+            _SCHEMAS.popitem(last=False)
+    return df
 
 
 # ---------------------------------------------------------------- build lease
@@ -681,6 +813,9 @@ class build_lease:
         self._thread = None
         self._stop = None
         self.heartbeat_errors: list = []
+        #: set each time the heartbeat records an error, so a caller can
+        #: wait for a beat's outcome instead of sleeping past it
+        self.heartbeat_error_recorded = threading.Event()
 
     def __enter__(self):
         self._owner = acquire_build_lease(self._spark, self._idx_dir, self._ttl_ms)
@@ -705,6 +840,7 @@ class build_lease:
                         # Stop beating; the main thread's pre-publish
                         # fence re-checks ownership and aborts loudly.
                         self.heartbeat_errors.append(exc)
+                        self.heartbeat_error_recorded.set()
                         return
                     except BaseException as exc:  # noqa: BLE001 — transient FS/py4j hiccup
                         # a single failed beat must not doom a long
@@ -712,6 +848,7 @@ class build_lease:
                         # and keep beating (the next beat either renews
                         # or hits the definitive refusal above).
                         self.heartbeat_errors.append(exc)
+                        self.heartbeat_error_recorded.set()
 
             self._thread = threading.Thread(
                 target=_beat, daemon=True,

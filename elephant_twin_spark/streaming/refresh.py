@@ -76,6 +76,14 @@ def _revalidate_under_lease(spark: SparkSession, idx_dir: str, table_path: str):
     )
 
 
+def _read_delta(
+    spark: SparkSession, live: List[fsio.FileStat], new_or_changed: List[str]
+) -> DataFrame:
+    """The new/changed files, read with the stats the refresh's listing
+    already holds."""
+    return fsio.read_parquet(spark, stats=fsio.stats_of(live, new_or_changed))
+
+
 def refresh_block_index(
     spark: SparkSession,
     table_path: str,
@@ -127,7 +135,7 @@ def refresh_block_index(
         data_dir = f"{idx_dir}/postings"
         tmp_dir = f"{idx_dir}/postings_tmp"
         fsio.recover_publish(spark, tmp_dir, data_dir)
-        old = spark.read.parquet(data_dir)
+        old = fsio.read_parquet(spark, data_dir)
 
         # drop postings of changed/removed files (their byte layout is gone)
         obsolete = set(new_or_changed) | set(removed)
@@ -140,7 +148,7 @@ def refresh_block_index(
         key_expr = options.get("key_expr")
         sample_fraction = options.get("sample_fraction")
         if new_or_changed:
-            delta_df = spark.read.parquet(*new_or_changed)
+            delta_df = _read_delta(spark, live, new_or_changed)
             delta = build_mod.postings_for(
                 delta_df,
                 column,
@@ -222,13 +230,13 @@ def refresh_bloom_index(
         data_dir = f"{idx_dir}/sketch"
         tmp_dir = f"{idx_dir}/sketch_tmp"
         fsio.recover_publish(spark, tmp_dir, data_dir)
-        kept = spark.read.parquet(data_dir).where(
+        kept = fsio.read_parquet(spark, data_dir).where(
             ~F.col("file").isin(list(set(new_or_changed) | set(removed)))
         )
         merged = kept
         if new_or_changed:
             delta = build_mod.bloom_sketch_for(
-                spark.read.parquet(*new_or_changed), column, num_bits, num_hashes
+                _read_delta(spark, live, new_or_changed), column, num_bits, num_hashes
             )
             merged = kept.unionByName(delta)
 
@@ -310,12 +318,12 @@ def refresh_text_index(
         # DELETE a doclens_tmp that is the only copy of the missing half of
         # an interrupted paired publish; recover_pair heals that state first
         fsio.recover_pair(spark, [data_dir, lens_dir])
-        old = spark.read.parquet(data_dir)
+        old = fsio.read_parquet(spark, data_dir)
         kept = old.where(~F.col("file").isin(list(set(new_or_changed) | set(removed))))
         merged = kept
         if new_or_changed:
             delta = text_mod.postings_for(
-                spark.read.parquet(*new_or_changed),
+                _read_delta(spark, live, new_or_changed),
                 text_column,
                 desc.options["doc_id_column"],
                 tokenizer,
@@ -336,14 +344,14 @@ def refresh_text_index(
         # staged writes complete before the paired publish below — the old
         # postings-then-doclens ordering served new postings with old norms
         # for the whole doclens compute (r12 advisor)
-        old_lens = spark.read.parquet(lens_dir)
+        old_lens = fsio.read_parquet(spark, lens_dir)
         kept_lens = old_lens.where(
             ~F.col("file").isin(list(set(new_or_changed) | set(removed)))
         )
         merged_lens = kept_lens
         if new_or_changed:
             delta_lens = text_mod.doclens_for(
-                spark.read.parquet(*new_or_changed),
+                _read_delta(spark, live, new_or_changed),
                 text_column,
                 desc.options["doc_id_column"],
                 tokenizer,
@@ -356,7 +364,7 @@ def refresh_text_index(
         fsio.publish_pair(
             spark, [(tmp_dir, data_dir), (lens_tmp, lens_dir)]
         )
-        stats = spark.read.parquet(lens_dir).agg(
+        stats = fsio.read_parquet(spark, lens_dir).agg(
             F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
         ).first()
         options = dict(desc.options)
@@ -415,7 +423,7 @@ def refresh_zone_index(
         data_dir = f"{idx_dir}/zones"
         tmp_dir = f"{idx_dir}/zones_tmp"
         fsio.recover_publish(spark, tmp_dir, data_dir)
-        kept = spark.read.parquet(data_dir).where(
+        kept = fsio.read_parquet(spark, data_dir).where(
             ~F.col("file").isin(list(set(new_or_changed) | set(removed)))
         )
         merged = kept
@@ -425,7 +433,7 @@ def refresh_zone_index(
             # new files' zones were computed over the raw column, silently
             # mispruning files at query time)
             delta = build_mod.zones_for(
-                spark.read.parquet(*new_or_changed),
+                _read_delta(spark, live, new_or_changed),
                 column,
                 desc.options.get("key_expr"),
             )
@@ -583,7 +591,7 @@ def refresh_lsh_index(
         merged = kept
         if new_or_changed:
             delta = lsh_mod.banded_docs(
-                spark.read.parquet(*new_or_changed),
+                _read_delta(spark, live, new_or_changed),
                 desc.column,
                 o["id_column"],
                 num_perm=int(o["num_perm"]),
@@ -674,16 +682,16 @@ def refresh_ann_index(
         centroids = [
             list(r["centroid"])
             for r in sorted(
-                spark.read.parquet(cent_dir).collect(),
+                fsio.read_parquet(spark, cent_dir).collect(),
                 key=lambda r: r["cluster"],
             )
         ]
-        kept = spark.read.parquet(data_dir).where(
+        kept = fsio.read_parquet(spark, data_dir).where(
             ~F.col("file").isin(list(set(new_or_changed) | set(removed)))
         )
         merged = kept
         if new_or_changed:
-            delta_df = spark.read.parquet(*new_or_changed)
+            delta_df = _read_delta(spark, live, new_or_changed)
             id_col = desc.options["id_column"]
             delta = sim.ivf_assign(delta_df, vec_column, centroids).select(
                 F.col(id_col).alias("id"),

@@ -219,11 +219,11 @@ def test_heartbeat_beat_times_out_behind_parked_lock(spark, workdir):
     next beat renews and the fence still passes."""
     d = f"{workdir}/hb_parked"
     path = fsio._lease_path(d)
-    # ttl 4.5s → beat interval 1.5s: beat 1 fires at ~1.5, its bounded
-    # lock wait expires at ~3.0 (TimeoutError); we unpark at ~3.2 and
-    # immediately fence-renew at ~3.25, well inside the ttl — ≥1s of
-    # slack on every edge so a loaded host can't flake the test
-    lease = fsio.build_lease(spark, d, ttl_ms=4_500)
+    # ttl 6s → beat interval 2s: beat 1 fires at ~2, its bounded lock
+    # wait expires at ~4 (TimeoutError, recorded → event set); we unpark
+    # as soon as the heartbeat records it and fence-renew right after,
+    # ~2s inside the ttl. No wall-clock sleep decides the order.
+    lease = fsio.build_lease(spark, d, ttl_ms=6_000)
     with lease as owner:
         lock = fsio._renew_lock(path)
         parked = threading.Event()
@@ -237,7 +237,8 @@ def test_heartbeat_beat_times_out_behind_parked_lock(spark, workdir):
         t = threading.Thread(target=hold_lock, daemon=True)
         t.start()
         assert parked.wait(timeout=5.0)
-        time.sleep(3.2)  # beat 1's bounded wait (1.5s from t≈1.5) expires
+        # beat 1's bounded wait expires and the heartbeat records it
+        assert lease.heartbeat_error_recorded.wait(timeout=30.0)
         unpark.set()
         t.join(timeout=5.0)
         fsio.renew_build_lease(spark, d, owner)  # the fence: must pass

@@ -234,18 +234,45 @@ def test_build_normalize_after_group_identical(spark, workdir):
         .groupBy("file")
         .agg(F.sort_array(F.collect_set("event_type")).alias("event_type_values"))
     )
+    bits, hashes = build.BLOOM_DEFAULT_BITS, build.BLOOM_DEFAULT_HASHES
+    bloom_key = F.col("user_id").cast("string")
+    old_words = (
+        df().select(bloom_key.alias("key"), old_file)
+        .where(bloom_key.isNotNull())
+        .select(
+            "file",
+            F.explode(F.array(*[
+                build._bloom_pos_sql(F.col("key"), i, bits) for i in range(hashes)
+            ])).alias("pos"),
+        )
+        .select(
+            "file",
+            (F.col("pos") / 64).cast("int").alias("word"),
+            F.expr("shiftleft(1L, cast(pos % 64 as int))").alias("mask"),
+        )
+        .groupBy("file", "word")
+        .agg(F.expr("bit_or(mask)").alias("val"))
+    )
+    old_bloom = (
+        old_words.groupBy("file")
+        .agg(F.map_from_entries(F.collect_list(F.struct("word", "val"))).alias("_m"))
+        .select(
+            "file",
+            F.expr(
+                f"transform(sequence(0, {bits // 64 - 1}), "
+                "w -> coalesce(element_at(_m, w), 0L))"
+            ).alias("bits"),
+        )
+    )
     for tag, old, new in (
         ("postings", old_postings, build.postings_for(df(), "event_type")),
         ("zones", old_zones, build.zones_for(df(), "ts")),
         ("values", old_values, text_mod.file_value_sets(df(), ["event_type"])),
-        # bloom's old shape differs only by the same projection swap;
-        # compare against itself built from the shipped module
-        ("bloom", None, build.bloom_sketch_for(df(), "user_id")),
+        ("bloom", old_bloom, build.bloom_sketch_for(df(), "user_id", bits, hashes)),
     ):
-        if old is not None:
-            assert old.schema == new.schema, tag
-            assert old.exceptAll(new).count() == 0, tag
-            assert new.exceptAll(old).count() == 0, tag
+        assert old.schema == new.schema, tag
+        assert old.exceptAll(new).count() == 0, tag
+        assert new.exceptAll(old).count() == 0, tag
         # the decoded-literal contract: no %20 spellings in `file`
         files = [r["file"] for r in new.select("file").distinct().collect()]
         assert files and all("%20" not in f and " " in f for f in files), (tag, files)

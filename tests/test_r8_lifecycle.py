@@ -292,8 +292,15 @@ def test_scd2_merge_validate_raises_on_absorbed_late_event(spark):
     )
     assert hist.select("last_ts").first()["last_ts"] == 20
     batch = spark.createDataFrame([(1, 15, 3, "b")], "uid int, ts int, eid int, st string")
+    base_rdds = settled_rdd_count(spark)
+    base_blocks = lifecycle.storage_snapshot(spark)["n_blocks"]
+    # no enclosing scope: the probe's pin must be freed before the raise
     with pytest.raises(ValueError, match="watermark contract"):
         temporal.scd2_merge(hist, batch, ["uid"], "ts", ["st"], tiebreak=["eid"])
+    snap = _wait_storage(
+        spark, lambda s: s["n_rdds"] <= base_rdds and s["n_blocks"] <= base_blocks
+    )
+    assert snap["n_rdds"] <= base_rdds and snap["n_blocks"] <= base_blocks, snap
     # explicit opt-out skips the probe (caller accepts divergence risk)
     out = temporal.scd2_merge(
         hist, batch, ["uid"], "ts", ["st"], tiebreak=["eid"], validate=False
