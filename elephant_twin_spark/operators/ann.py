@@ -66,10 +66,11 @@ def build_ann_index(
     # MOST here: two interleaved pair-builders could publish halves
     # from different epochs, the exact mixed-generation state the
     # epoch markers exist to catch.
+    cent_dir, vec_dir = f"{idx_dir}/centroids", f"{idx_dir}/vectors"
     with fsio.build_lease(spark, idx_dir) as lease_owner:
         spark.createDataFrame(
             cent_rows, "cluster int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{idx_dir}/centroids.staging")
+        ).coalesce(1).write.mode("overwrite").parquet(fsio.staged_dir(cent_dir))
         assigned = sim.ivf_assign(df, vec_column, centroids).select(
             F.col(id_column).alias("id"),
             F.transform(F.col(vec_column), lambda x: x.cast("double")).alias("vec"),
@@ -81,7 +82,7 @@ def build_ann_index(
             assigned.repartition("cluster")
             .write.mode("overwrite")
             .partitionBy("cluster")
-            .parquet(f"{idx_dir}/vectors.staging")
+            .parquet(fsio.staged_dir(vec_dir))
         )
         # paired publish (r12 advisor): one shared epoch stamped into both
         # staged dirs before the renames — a crash BETWEEN the two publishes
@@ -89,14 +90,7 @@ def build_ann_index(
         # silently skewing results until the next full rebuild; now readers
         # cross-check the epochs (require_pair_published) and recover_pair
         # finishes the interrupted half from its staged sibling
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_pair(
-            spark,
-            [
-                (f"{idx_dir}/centroids.staging", f"{idx_dir}/centroids"),
-                (f"{idx_dir}/vectors.staging", f"{idx_dir}/vectors"),
-            ],
-        )
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [cent_dir, vec_dir])
         desc = catalog.make_descriptor(
             source_path=table_path,
             column=vec_column,

@@ -27,7 +27,7 @@ data movement.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -274,7 +274,7 @@ def build_block_index(
     sample_fraction: Optional[float] = None,
     seed: int = 42,
     overwrite: bool = True,
-    df: Optional[DataFrame] = None,
+    scan: Optional[Tuple[List[fsio.FileStat], DataFrame]] = None,
     key_expr: Optional[str] = None,
 ) -> BuildResult:
     """Build (or rebuild) the sparse index for (table, column).
@@ -284,24 +284,25 @@ def build_block_index(
     incremental refresh of only-new files lives in
     :mod:`elephant_twin_spark.streaming.refresh`.
 
-    ``df`` lets :func:`build_block_indexes` pass a shared (cached) scan of
-    the table; it must be a file-source read of ``table_path``.
+    ``scan`` lets :func:`build_block_indexes` pass ``(files, df)``: a
+    listing of ``table_path`` and a shared (cached) file-source read of
+    exactly those files.
     """
     idx_dir = catalog.index_dir(index_root, table_path, column, kind="block")
+    data_dir = f"{idx_dir}/postings"
     # one descriptor read, reused after the self-heal (r12 advisor: the
     # recovered postings dir cannot change the descriptor, so a re-read
     # is a redundant driver-side metadata round trip per ensure call)
     desc = None if overwrite else catalog.read_descriptor(spark, idx_dir)
     if desc is not None:
-        # Self-heal a publish crashed between delete and rename (r12):
-        # the descriptor survives while the postings dir is absent and
-        # its complete .staging sibling sits next to it — without this,
-        # the early return would pin the broken state and every query
-        # on the indexed column would keep raising require_published's
-        # FileNotFoundError until a manual overwrite=True rebuild.
-        fsio.recover_publish(
-            spark, f"{idx_dir}/postings.staging", f"{idx_dir}/postings"
-        )
+        # Self-heal a build's or refresh's publish crashed between
+        # delete and rename: the descriptor survives while the postings
+        # dir is absent and its complete staged sibling sits next to it
+        # — without this, the early return would pin the broken state
+        # and every query on the indexed column would keep raising
+        # require_published's FileNotFoundError until a manual
+        # overwrite=True rebuild.
+        fsio.recover_publish(spark, fsio.staged_dir(data_dir), data_dir)
         return BuildResult(idx_dir, column, len(desc.files), -1)
 
     # List the source BEFORE the scan (r11 review): a file landing
@@ -312,9 +313,11 @@ def build_block_index(
     # mid-build is missing from the descriptor (not_covered → always
     # scanned), and a file modified mid-build fails the query-time
     # checksum (stale → full scan). Same ordering in every builder.
-    files = fsio.list_data_files(spark, table_path)
-    if df is None:
+    if scan is None:
+        files = fsio.list_data_files(spark, table_path)
         df = fsio.read_parquet(spark, table_path, stats=files)
+    else:
+        files, df = scan
     postings = postings_for(
         df,
         column,
@@ -328,24 +331,22 @@ def build_block_index(
     # postings dir in place hands a concurrent reader — whose old
     # descriptor still claims full coverage with valid checksums — a
     # partially-deleted/partially-committed postings table, and missing
-    # postings rows prune files silently. Writing to .staging and
-    # publishing via delete+rename shrinks the reader-visible window to
+    # postings rows prune files silently. Writing to the staged sibling
+    # and publishing via delete+rename shrinks the reader-visible window to
     # two metadata ops that fail LOUDLY (absent dir), never silently
     # wrong; a crash mid-publish is completed by fsio.recover_publish.
-    data_dir = f"{idx_dir}/postings"
-    staging = f"{data_dir}.staging"
-    # Build lease (r13 verdict item 4): two concurrent builds of one
-    # index share the staged path — B's overwrite can gut the dir A is
-    # renaming. Create-exclusive marker + ttl takeover; see fsio.
+    # Build lease: two concurrent builds of one index share the staged
+    # path — B's overwrite can gut the dir A is renaming.
+    # Create-exclusive marker + ttl takeover; see fsio.
     with fsio.build_lease(spark, idx_dir) as lease_owner:
         write_range_partitioned(
-            postings, num_buckets, "key", ("key", "file"), staging, bloom_col="key"
+            postings, num_buckets, "key", ("key", "file"), fsio.staged_dir(data_dir),
+            bloom_col="key",
         )
         # fence: a build whose lease was TAKEN OVER (paused past the
         # ttl despite the scope's heartbeat — fsio.build_lease) aborts
-        # here, BEFORE the destructive publish (fsio.renew_build_lease)
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_dir(spark, staging, data_dir)
+        # BEFORE the destructive publish
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [data_dir])
 
         # Descriptor AFTER a successful data write (write-then-publish, so a
         # failed build never yields a descriptor pointing at garbage).
@@ -432,10 +433,10 @@ def build_zone_index(
     df = fsio.read_parquet(spark, table_path, stats=files)
     zones = zones_for(df, column, key_expr)
     # stage + publish + lease: see build_block_index
+    data_dir = f"{idx_dir}/zones"
     with fsio.build_lease(spark, idx_dir) as lease_owner:
-        zones.coalesce(1).write.mode("overwrite").parquet(f"{idx_dir}/zones.staging")
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_dir(spark, f"{idx_dir}/zones.staging", f"{idx_dir}/zones")
+        zones.coalesce(1).write.mode("overwrite").parquet(fsio.staged_dir(data_dir))
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [data_dir])
         desc = catalog.make_descriptor(
             source_path=table_path,
             column=column,
@@ -508,10 +509,10 @@ def build_bloom_index(
         fsio.read_parquet(spark, table_path, stats=files), column, num_bits, num_hashes
     )
     # stage + publish + lease: see build_block_index
+    data_dir = f"{idx_dir}/sketch"
     with fsio.build_lease(spark, idx_dir) as lease_owner:
-        sketch.coalesce(1).write.mode("overwrite").parquet(f"{idx_dir}/sketch.staging")
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_dir(spark, f"{idx_dir}/sketch.staging", f"{idx_dir}/sketch")
+        sketch.coalesce(1).write.mode("overwrite").parquet(fsio.staged_dir(data_dir))
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [data_dir])
         desc = catalog.make_descriptor(
             source_path=table_path,
             column=column,
@@ -592,11 +593,14 @@ def build_block_indexes(
     columns + file metadata (column-pruned, spilled to disk if large), so
     at 100 TB the table is read once instead of k times. Each column
     still gets its own shuffle + bucketed write (their partitionings
-    differ by definition)."""
+    differ by definition). The table is listed once, before the scan
+    (see :func:`build_block_index`), and every column's descriptor
+    records that listing."""
     from pyspark import StorageLevel
 
     cols = list(columns)
-    shared = spark.read.parquet(table_path).select(
+    files = fsio.list_data_files(spark, table_path)
+    shared = fsio.read_parquet(spark, table_path, stats=files).select(
         *cols,
         F.col("_metadata.file_path").alias("_mfp"),
         F.col("_metadata.file_block_start").alias("_mbs"),
@@ -611,7 +615,7 @@ def build_block_indexes(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return [
-            build_block_index(spark, table_path, c, index_root, df=shared, **kw)
+            build_block_index(spark, table_path, c, index_root, scan=(files, shared), **kw)
             for c in cols
         ]
     finally:

@@ -86,9 +86,9 @@ def compact_table(
     re-layout safe. A crashed publish self-heals on the next call."""
     from elephant_twin_spark.sources import fsio
 
-    staging = dst_path.rstrip("/") + ".staging"
-    # writer lease (r14): two concurrent re-layouts of one dst share the
-    # .staging path — same gutting risk the index builders' lease closed
+    staging = fsio.staged_dir(dst_path)
+    # writer lease: two concurrent re-layouts of one dst share the
+    # staged path — same gutting risk the index builders' lease closed
     with fsio.writer_lease(spark, dst_path) as lease_owner:
         fsio.recover_publish(spark, staging, dst_path)
         total = sum(size for _, size, _ in fsio.list_data_files(spark, src_path))
@@ -131,7 +131,7 @@ def cluster_table(
     re-clustering safe)."""
     from elephant_twin_spark.sources import fsio, tables
 
-    staging = dst_path.rstrip("/") + ".staging"
+    staging = fsio.staged_dir(dst_path)
     # writer lease: see compact_table
     with fsio.writer_lease(spark, dst_path) as lease_owner:
         fsio.recover_publish(spark, staging, dst_path)
@@ -366,7 +366,7 @@ def zorder_table(
 
     if bits * len(zorder_cols) > 63:
         raise ValueError("bits * len(zorder_cols) must be <= 63")
-    staging = dst_path.rstrip("/") + ".staging"
+    staging = fsio.staged_dir(dst_path)
     # writer lease: see compact_table
     with fsio.writer_lease(spark, dst_path) as lease_owner:
         fsio.recover_publish(spark, staging, dst_path)

@@ -42,13 +42,13 @@ from elephant_twin_spark.operators.pipeline import dedup
 from elephant_twin_spark.sources import catalog, fsio
 
 
-def _bloom_prefilter(
-    probe: DataFrame,
-    corpus: DataFrame,
-    key_col: str,
-    bloom_bits: int = 1 << 20,
-    bloom_hashes: int = 3,
-) -> DataFrame:
+#: Bloom prefilter geometry: 2^20 bits (128 KiB) hold ~10^5 distinct
+#: probe keys at ~2% false-positive rate with 3 hash lanes
+_BLOOM_BITS = 1 << 20
+_BLOOM_HASHES = 3
+
+
+def _bloom_prefilter(probe: DataFrame, corpus: DataFrame, key_col: str) -> DataFrame:
     """Row-prune ``corpus`` to (a superset of) the rows whose
     ``key_col`` appears in ``probe``'s, via a Bloom bitmap built from
     the probe side (guide §3) — the above-``pushdown_limit`` fallback
@@ -60,11 +60,11 @@ def _bloom_prefilter(
     bit positions → ``bit_or`` words → dense ``array<bigint>``) carried
     as a one-row broadcast, and membership is tested with O(1)
     ``element_at`` probes per corpus row — no per-row driver state, no
-    Python. ``bloom_bits`` = 2^20 holds ~10^5 distinct probe keys at
-    ~2% false-positive rate with 3 lanes; beyond that the filter
-    degrades gracefully toward pass-through (never toward wrong rows).
+    Python. Beyond the ~10^5 probe keys ``_BLOOM_BITS`` is sized for,
+    the filter degrades gracefully toward pass-through (never toward
+    wrong rows).
     """
-    n_words = bloom_bits // 64
+    n_words = _BLOOM_BITS // 64
     qcol = f"`{key_col.replace('`', '``')}`"
 
     def pos_sql(i: int) -> str:
@@ -72,12 +72,12 @@ def _bloom_prefilter(
         # independent hash lanes (the extra arg changes the hash); ONE
         # snippet shared by the build and test sides so the two can
         # never disagree on a position
-        return f"pmod(xxhash64({qcol}, {i}), {bloom_bits}L)"
+        return f"pmod(xxhash64({qcol}, {i}), {_BLOOM_BITS}L)"
 
     words = (
         probe.select(
             F.explode(
-                F.array(*[F.expr(pos_sql(i)) for i in range(bloom_hashes)])
+                F.array(*[F.expr(pos_sql(i)) for i in range(_BLOOM_HASHES)])
             ).alias("pos")
         )
         .select(
@@ -98,7 +98,7 @@ def _bloom_prefilter(
     cond = " AND ".join(
         f"(element_at(_bf_bits, cast({pos_sql(i)} / 64 as int) + 1)"
         f" & shiftleft(1L, cast({pos_sql(i)} % 64 as int))) != 0"
-        for i in range(bloom_hashes)
+        for i in range(_BLOOM_HASHES)
     )
     return corpus.crossJoin(F.broadcast(bits_df)).where(F.expr(cond)).drop("_bf_bits")
 
@@ -177,13 +177,13 @@ def build_lsh_index(
     # the input is the OUTPUT of an expensive shuffle aggregate (text
     # postings, block-index range merges).
     # stage + publish + lease: see build.build_block_index
+    data_dir = f"{idx_dir}/bands"
     with fsio.build_lease(spark, idx_dir) as lease_owner:
         build_mod.write_range_partitioned(
             bands, num_buckets, "band_hash", ("band_hash", "id"),
-            f"{idx_dir}/bands.staging", pin_input=False,
+            fsio.staged_dir(data_dir), pin_input=False,
         )
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_dir(spark, f"{idx_dir}/bands.staging", f"{idx_dir}/bands")
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [data_dir])
         desc = catalog.make_descriptor(
             source_path=table_path,
             column=text_column,
@@ -295,9 +295,9 @@ class LshIndex:
         failure the pushdown exists to prevent. File-level pruning is
         genuinely dead there (xxhash64 band hashes are uniform, so
         >4096 of them land in every range-partitioned file), but ROW
-        pruning is not: the probe's hashes are folded into a fixed-size
-        Bloom bitmap (one extra aggregate over the already-pinned probe
-        band table; ``bloom_bits``, default 2^20 ≈ 128 KiB) and tested
+        pruning is not: the probe's hashes are folded into a Bloom
+        bitmap of a fixed 2^20 bits ≈ 128 KiB (one extra aggregate over
+        the already-pinned probe band table) and tested
         against every bucket row BEFORE the join, so when the probe
         side outgrows broadcast range the corpus side sheds ~all
         non-colliding rows before the sort-merge exchange instead of
@@ -392,7 +392,7 @@ class LshIndex:
         cands = lifecycle.pin(
             self.candidate_pairs(docs, text_col, id_col, probe_sigs=probe_sigs)
         )
-        corpus = self.spark.read.parquet(self.table_path).select(
+        corpus = fsio.read_parquet(self.spark, self.table_path).select(
             F.col(self.id_column).alias("corpus_id"),
             F.col(self.text_column).alias("_ctext"),
         )

@@ -405,6 +405,8 @@ def build_text_index(
     # the written parquet). Released before returning.
     from elephant_twin_spark.operators import build as build_mod
 
+    postings_dir, lens_dir = f"{idx_dir}/postings", f"{idx_dir}/doclens"
+
     def _span(src: DataFrame) -> None:
         # Stage both data dirs, publish both back-to-back at the end of
         # the span (see build.build_block_index: mid-rebuild reader
@@ -414,7 +416,7 @@ def build_text_index(
         # metadata renames.
         build_mod.write_range_partitioned(
             src, num_buckets, "term", ("term", "doc_id"),
-            f"{idx_dir}/postings.staging", bloom_col="term", pin_input=False,
+            fsio.staged_dir(postings_dir), bloom_col="term", pin_input=False,
         )
         # doc-length norms for BM25 (the Lucene "norms" analog, T2) plus
         # the SMART lnc cosine norm for more_like_this: tiny table (one
@@ -441,7 +443,7 @@ def build_text_index(
         )
         out = doclens.select("doc_id", "dl", "norm", "file").unionByName(tokenless)
         out.coalesce(max(1, num_buckets // 4)).write.mode("overwrite").parquet(
-            f"{idx_dir}/doclens.staging"
+            fsio.staged_dir(lens_dir)
         )
         # one shared pair epoch across both renames (r12 advisor): a
         # crash between them left new postings with OLD BM25 norms
@@ -450,14 +452,7 @@ def build_text_index(
         # with-statement below before run_pinned_with_retry runs us);
         # liveness during the staged write comes from the lease scope's
         # heartbeat (r15, fsio.build_lease)
-        fsio.renew_build_lease(spark, idx_dir, lease_owner)
-        fsio.publish_pair(
-            spark,
-            [
-                (f"{idx_dir}/postings.staging", f"{idx_dir}/postings"),
-                (f"{idx_dir}/doclens.staging", f"{idx_dir}/doclens"),
-            ],
-        )
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, [postings_dir, lens_dir])
 
     # Pin the postings once for the whole span (both writes are
     # mode("overwrite"), so the span is retry-idempotent); the shared
@@ -470,11 +465,6 @@ def build_text_index(
     # pair-builders could otherwise publish halves of different epochs).
     with fsio.build_lease(spark, idx_dir) as lease_owner:
         build_mod.run_pinned_with_retry(postings, _span)
-        # corpus stats from the just-written table, not the doclens
-        # lineage: re-evaluating the lineage would re-tokenize the corpus
-        stats = fsio.read_parquet(spark, f"{idx_dir}/doclens").agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).first()
         desc = catalog.make_descriptor(
             source_path=table_path,
             column=text_column,
@@ -484,12 +474,21 @@ def build_text_index(
             options={
                 "doc_id_column": doc_id_column,
                 "tokenizer": tokenizer_name,
-                "n_docs": str(stats["n"]),
-                "avgdl": str(float(stats["avgdl"] or 0.0)),
+                **corpus_stats(spark, lens_dir),
             },
         )
         catalog.write_descriptor(spark, idx_dir, desc)
     return idx_dir
+
+
+def corpus_stats(spark: SparkSession, lens_dir: str) -> dict:
+    """Descriptor options ``n_docs`` and ``avgdl`` of a published doclens
+    table. Read from the written table, not the doclens lineage:
+    re-evaluating the lineage would re-tokenize the corpus."""
+    stats = fsio.read_parquet(spark, lens_dir).agg(
+        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+    ).first()
+    return {"n_docs": str(stats["n"]), "avgdl": str(float(stats["avgdl"] or 0.0))}
 
 
 # --------------------------------------------------------------------- query

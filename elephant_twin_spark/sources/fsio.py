@@ -134,6 +134,15 @@ def delete(spark: SparkSession, path: str) -> None:
         fs.delete(jpath, True)
 
 
+def staged_dir(final_dir: str) -> str:
+    """The staged sibling of ``final_dir``, ``<final_dir>.staging``: the
+    one name every rewrite (index builds and refreshes, table re-layout,
+    sketch compaction) writes before :func:`publish_dir` swaps it in,
+    and the one name :func:`recover_publish`, :func:`recover_pair` and
+    :func:`require_published` look for."""
+    return final_dir.rstrip("/") + ".staging"
+
+
 def publish_dir(spark: SparkSession, tmp_dir: str, final_dir: str) -> None:
     """Write-then-publish: replace ``final_dir`` with the fully-written
     ``tmp_dir`` (delete + rename). Raises ``OSError`` when the rename
@@ -147,14 +156,15 @@ def publish_dir(spark: SparkSession, tmp_dir: str, final_dir: str) -> None:
     while ``tmp_dir`` is complete. That window never publishes WRONG
     data (the descriptor still describes the old state and reads fail
     loudly); call :func:`recover_publish` before reading ``final_dir``
-    to complete an interrupted publish.
+    to complete an interrupted publish. Writers stage at
+    :func:`staged_dir`, so any later build or refresh of the same
+    index finds the crashed publish of either.
 
-    SINGLE WRITER assumed (the house-wide build/refresh contract —
-    same note as ``sinkfmt.ensure_sink_format`` and the bucketed-table
-    work dirs): two concurrent builds of the SAME index share one
-    staged path, so writer B's overwrite can gut the dir writer A is
-    about to rename. Concurrent builds of different indexes (different
-    ``final_dir``) are fine."""
+    SINGLE WRITER per ``final_dir``: two concurrent writers of the SAME
+    dir share one staged path, so writer B's overwrite can gut the dir
+    writer A is about to rename. Callers hold :class:`build_lease` (or
+    :func:`writer_lease`) around the staged write and the publish.
+    Concurrent writers of different dirs are fine."""
     fs, _, _ = _fs_and_path(spark, final_dir)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     if not fs.exists(jvm_path(tmp_dir)):
@@ -226,38 +236,36 @@ def recover_publish(spark: SparkSession, tmp_dir: str, final_dir: str) -> bool:
 
 def require_published(spark: SparkSession, final_dir: str) -> None:
     """Reader-side diagnosis for :func:`publish_dir`'s delete→rename
-    window: when ``final_dir`` is missing but a staged sibling survives
-    (``_tmp`` — the refreshers' convention — or ``.staging`` — the full
-    builders', r12), a publish is in flight or crashed there — the data
-    is complete in the staged dir, and the raw parquet path-not-found a
-    reader would otherwise hit says none of that (r9 verdict item 6).
-    Raises ``FileNotFoundError`` naming the recovery; a missing dir
-    with NO staged sibling falls through to the reader's normal error.
+    window: when ``final_dir`` is missing but its :func:`staged_dir`
+    survives, a publish is in flight or crashed there — the data is
+    complete in the staged dir, and the raw parquet path-not-found a
+    reader would otherwise hit says none of that. Raises
+    ``FileNotFoundError`` naming the recovery; a missing dir with no
+    staged sibling falls through to the reader's normal error.
     :func:`read_parquet` calls it only once its listing of the
     directory has failed, so a published index table pays nothing
     extra; direct callers pay one ``exists()`` metadata call."""
     if exists(spark, final_dir):
         return
-    for tmp_dir in (
-        final_dir.rstrip("/") + "_tmp",
-        final_dir.rstrip("/") + ".staging",
-    ):
-        if exists(spark, tmp_dir):
-            if staging_committed(spark, tmp_dir):
-                raise FileNotFoundError(
-                    f"{final_dir} is missing but its staged sibling "
-                    f"{tmp_dir} exists: a build/refresh is publishing "
-                    "right now, or crashed between delete and rename. "
-                    "The staged data is complete — re-run the "
-                    "build/refresh, or call fsio.recover_publish(spark, "
-                    f"{tmp_dir!r}, {final_dir!r}) to finish the publish."
-                )
-            raise FileNotFoundError(
-                f"{final_dir} is missing and its staged sibling "
-                f"{tmp_dir} is INCOMPLETE (a rebuild was killed "
-                "mid-write): there is no recoverable copy — re-run the "
-                "build/refresh to rebuild the index."
-            )
+    tmp_dir = staged_dir(final_dir)
+    if not exists(spark, tmp_dir):
+        return
+    if staging_committed(spark, tmp_dir):
+        raise FileNotFoundError(
+            f"{final_dir} is missing but its staged sibling "
+            f"{tmp_dir} exists: a build/refresh is publishing "
+            "right now, or crashed between delete and rename. "
+            "The staged data is complete — re-run the build (a "
+            "refresh heals it only when it has files to index or "
+            "drop), or call fsio.recover_publish(spark, "
+            f"{tmp_dir!r}, {final_dir!r}) to finish the publish."
+        )
+    raise FileNotFoundError(
+        f"{final_dir} is missing and its staged sibling "
+        f"{tmp_dir} is INCOMPLETE (a rebuild was killed "
+        "mid-write): there is no recoverable copy — re-run the "
+        "build/refresh to rebuild the index."
+    )
 
 
 # --------------------------------------------------------------- parquet reads
@@ -301,7 +309,8 @@ def read_parquet(
     Three call shapes:
 
     * ``read_parquet(spark, idx_dir)`` — one of the package's own
-      published index tables. The directory is listed here
+      published index tables, or a table the caller has not listed (the
+      LSH gate's corpus). The directory is listed here
       (:func:`_first_data_file`); when the listing fails,
       :func:`require_published` names an in-flight or crashed publish
       before Spark raises its own path-not-found.
@@ -922,11 +931,19 @@ def publish_pair(spark: SparkSession, pairs, epoch: str = None) -> str:
     return epoch
 
 
-def _staged_siblings(final_dir: str):
-    # both house staging conventions: `_tmp` (refreshers), `.staging`
-    # (full builders)
-    base = final_dir.rstrip("/")
-    return (base + "_tmp", base + ".staging")
+def fence_and_publish(spark: SparkSession, idx_dir: str, owner: str, final_dirs) -> None:
+    """The last two steps of an index rewrite under :class:`build_lease`:
+    the fence (:func:`renew_build_lease` — a writer whose lease was
+    taken over aborts here, before the destructive publish), then the
+    publish of each dir in ``final_dirs`` from its :func:`staged_dir`.
+    Several dirs are published as a pair (:func:`publish_pair`); one
+    keeps whatever pair epoch its staged dir carries."""
+    renew_build_lease(spark, idx_dir, owner)
+    if len(final_dirs) > 1:
+        publish_pair(spark, [(staged_dir(d), d) for d in final_dirs])
+    else:
+        (final,) = final_dirs
+        publish_dir(spark, staged_dir(final), final)
 
 
 def pair_mismatch(spark: SparkSession, final_dirs) -> bool:
@@ -942,8 +959,9 @@ def pair_mismatch(spark: SparkSession, final_dirs) -> bool:
 def recover_pair(spark: SparkSession, final_dirs) -> bool:
     """Heal a pair publish interrupted between its renames. Steps:
 
-    1. finish any half whose final dir is missing but a staged sibling
-       survives (the mid-rename crash ``recover_publish`` also heals);
+    1. finish any half whose final dir is missing but its committed
+       :func:`staged_dir` survives (the mid-rename crash
+       ``recover_publish`` also heals);
     2. if the live epochs mismatch, publish the staged sibling whose
        epoch matches another live dir's epoch — the surviving half of
        the interrupted pair — until consistent (raises if no staged
@@ -954,55 +972,37 @@ def recover_pair(spark: SparkSession, final_dirs) -> bool:
     Returns True iff any rename was performed. NEVER deletes a staged
     dir while the pair is inconsistent — that staged dir may be the
     only copy of the missing half (the reason paired indexes must call
-    this instead of per-dir ``recover_publish``)."""
+    this instead of per-dir ``recover_publish``). Each final dir has
+    one staged sibling: the writer lease serializes the builds and
+    refreshes of an index, and each overwrites the staging dir."""
     healed = False
     # 1: complete missing finals (committed stagings only — an
     # uncommitted one is a killed write, not an interrupted publish;
     # renaming it would serve partial data)
     for final in final_dirs:
-        if exists(spark, final):
+        tmp = staged_dir(final)
+        if exists(spark, final) or not exists(spark, tmp):
             continue
-        for tmp in _staged_siblings(final):
-            if exists(spark, tmp):
-                if not staging_committed(spark, tmp):
-                    delete(spark, tmp)
-                    continue
-                publish_dir(spark, tmp, final)
-                healed = True
-                break
-    # 2: resolve epoch mismatch via surviving staged halves. ALL
-    # committed staged siblings are collected per final dir (r13
-    # advisor): a stale committed `_tmp` left by an aborted refresh
-    # must not SHADOW the `.staging` that carries the epoch completing
-    # the pair — with first-sibling-wins, that state raised "rebuild
-    # the index" although recovery was possible.
+        if staging_committed(spark, tmp):
+            publish_dir(spark, tmp, final)
+            healed = True
+        else:
+            delete(spark, tmp)
+    # 2: resolve an epoch mismatch via the surviving staged halves
     if pair_mismatch(spark, final_dirs):
         live = {d: read_pair_epoch(spark, d) for d in final_dirs}
-        staged: Dict[str, List[Tuple[str, object]]] = {}
-        for final in final_dirs:
-            for tmp in _staged_siblings(final):
-                if exists(spark, tmp) and staging_committed(spark, tmp):
-                    staged.setdefault(final, []).append(
-                        (tmp, read_pair_epoch(spark, tmp))
-                    )
-        # target epoch: reachable by every dir (live==T or a staged
-        # sibling carries T), preferring one that requires publishing
-        # staged data (the interrupted NEW generation)
-        candidates = {e for e in live.values() if e is not None} | {
-            e for sibs in staged.values() for _, e in sibs if e is not None
-        }
-
-        def _staged_with(final: str, epoch) -> str:
-            for tmp, e in staged.get(final, ()):
-                if e == epoch:
-                    return tmp
-            return ""
-
+        staged = {}
+        for d in final_dirs:
+            tmp = staged_dir(d)
+            if exists(spark, tmp) and staging_committed(spark, tmp):
+                staged[d] = read_pair_epoch(spark, tmp)
+        # target epoch: reachable by every dir (live or staged carries
+        # it), preferring one that requires publishing staged data (the
+        # interrupted NEW generation)
+        candidates = {e for e in (*live.values(), *staged.values()) if e is not None}
         target = None
         for t in sorted(candidates):
-            ok = all(
-                live[d] == t or _staged_with(d, t) for d in final_dirs
-            )
+            ok = all(live[d] == t or staged.get(d) == t for d in final_dirs)
             if ok and (
                 target is None
                 or any(live[d] != t for d in final_dirs)  # needs a publish
@@ -1016,13 +1016,11 @@ def recover_pair(spark: SparkSession, final_dirs) -> bool:
             )
         for final in final_dirs:
             if live[final] != target:
-                publish_dir(spark, _staged_with(final, target), final)
+                publish_dir(spark, staged_dir(final), final)
                 healed = True
     # 3: consistent — clean aborted-run staging leftovers
     for final in final_dirs:
-        for tmp in _staged_siblings(final):
-            if exists(spark, tmp):
-                delete(spark, tmp)
+        delete(spark, staged_dir(final))
     return healed
 
 

@@ -335,27 +335,21 @@ def compact_sketch_rollup(spark: SparkSession, sink_path: str) -> int:
     sink root, so a micro-batch landing between the compaction's read
     and its publish would be deleted with the pre-compaction partials.
 
-    The staged dir uses the house ``_tmp`` sibling convention so a
-    publish crashed between delete and rename is DIAGNOSED by name on
-    the next read (``fsio.require_published`` in the readers) and
-    healed by the next compaction's ``recover_publish`` (r12 review —
-    the old ``_compact_tmp`` name matched neither convention, so a
-    crashed publish surfaced as a bare parquet path-not-found)."""
+    The compaction stages at the one ``.staging`` sibling
+    (``fsio.staged_dir``), so a publish crashed between delete and
+    rename is DIAGNOSED by name on the next read
+    (``fsio.require_published`` in the readers) and healed by the next
+    compaction's ``recover_publish``."""
     from elephant_twin_spark.functions import sketches
 
     from elephant_twin_spark.sources import fsio
 
-    tmp = sink_path.rstrip("/") + "_tmp"
-    # writer lease (r14): two concurrent compactions share the `_tmp`
-    # staged path — same exclusion the index builders/refreshers take.
-    # (The stream-stopped contract above still governs compact-vs-batch.)
+    tmp = fsio.staged_dir(sink_path)
+    # writer lease: two concurrent compactions share the staged path —
+    # same exclusion the index builders/refreshers take. (The
+    # stream-stopped contract above still governs compact-vs-batch.)
     with fsio.writer_lease(spark, sink_path) as lease_owner:
         fsio.recover_publish(spark, tmp, sink_path)
-        # one-time legacy probe (r12 advisor): a publish that crashed under
-        # the pre-r12 staging name leaves the sink absent with data stranded
-        # at <sink>_compact_tmp — a state neither require_published nor the
-        # `_tmp` recovery above can see after the rename of the convention
-        fsio.recover_publish(spark, sink_path.rstrip("/") + "_compact_tmp", sink_path)
         compacted = (
             spark.read.parquet(sink_path)
             .groupBy("win_start", "win_end", "key")

@@ -476,3 +476,41 @@ def test_file_landing_mid_build_is_not_claimed_covered(spark, workdir, monkeypat
 
     got = eng.query(tbl, col("event_type") == "landed_mid_build").count()
     assert got == 5  # not_covered → scanned; nothing silently pruned
+
+
+def test_multi_column_build_lists_before_its_shared_scan(spark, workdir, monkeypatch):
+    """build_block_indexes records the listing its shared scan reads: a
+    file landing during that listing is indexed or left not-covered,
+    never claimed covered without postings (which would prune it
+    silently). The file is written with pyarrow — a same-session Spark
+    write would refresh the cached scan and hide the race."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elephant_twin_spark.sources import fsio
+
+    tbl = f"{workdir}/listrace_tbl"
+    spark.createDataFrame(
+        [(f"k{i % 3}", i) for i in range(30)], "k string, v long"
+    ).repartition(3).write.parquet(tbl)
+    real_list = fsio.list_data_files
+    landed = []
+
+    def land_then_list(spark_, path):
+        if not landed:
+            pq.write_table(
+                pa.table({"k": ["zzz"], "v": pa.array([99], pa.int64())}),
+                f"{tbl}/part-late.parquet",
+            )
+            landed.append(path)
+        return real_list(spark_, path)
+
+    monkeypatch.setattr(fsio, "list_data_files", land_then_list)
+    eng = Engine(spark, f"{workdir}/listrace_idx")
+    eng.build_indexes(tbl, ["k", "v"], num_buckets=2)
+    monkeypatch.undo()
+
+    assert landed
+    full = spark.read.parquet(tbl).where(F.col("k") == "zzz").count()
+    assert full == 1
+    assert eng.query(tbl, col("k") == "zzz").count() == full

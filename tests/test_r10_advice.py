@@ -384,7 +384,7 @@ def test_cache_registry_iteration_shape_degrades_with_warning():
 
 def test_reader_in_publish_window_gets_actionable_error(spark, workdir, events_multifile):
     """A reader landing inside publish_dir's delete→rename window (data
-    dir missing, staged _tmp sibling complete) must get the diagnosis —
+    dir missing, staged sibling complete) must get the diagnosis —
     refresh in progress or crashed, data intact, how to recover — not a
     bare parquet path-not-found (r9 verdict item 6)."""
     from elephant_twin_spark import col
@@ -394,11 +394,11 @@ def test_reader_in_publish_window_gets_actionable_error(spark, workdir, events_m
     eng.build_index(events_multifile, "event_type", num_buckets=4)
     idx_dir = catalog.index_dir(f"{workdir}/pubwin_root", events_multifile, "event_type")
     data_dir = idx_dir.replace("file://", "") + "/postings"
-    shutil.move(data_dir, data_dir + "_tmp")
+    shutil.move(data_dir, fsio.staged_dir(data_dir))
     with pytest.raises(FileNotFoundError, match="staged sibling"):
         eng.query(events_multifile, col("event_type") == "click").count()
     # recover_publish completes the interrupted publish; reads work again
-    assert fsio.recover_publish(spark, data_dir + "_tmp", data_dir)
+    assert fsio.recover_publish(spark, fsio.staged_dir(data_dir), data_dir)
     assert eng.query(events_multifile, col("event_type") == "click").count() > 0
 
 
@@ -411,10 +411,10 @@ def test_lsh_bands_reader_publish_window(spark, workdir):
     eng.build_lsh_index(corpus, "text", "doc_id", **LSH_PARAMS)
     idx = eng.lsh_index(corpus, "text")
     bands_dir = idx.idx_dir.replace("file://", "") + "/bands"
-    shutil.move(bands_dir, bands_dir + "_tmp")
+    shutil.move(bands_dir, fsio.staged_dir(bands_dir))
     with pytest.raises(FileNotFoundError, match="staged sibling"):
         idx.bands().count()
-    fsio.recover_publish(spark, bands_dir + "_tmp", bands_dir)
+    fsio.recover_publish(spark, fsio.staged_dir(bands_dir), bands_dir)
     assert idx.bands().count() == LSH_PARAMS["num_bands"]
 
 
@@ -560,10 +560,10 @@ def test_bloom_sketch_reader_publish_window(spark, workdir, events_multifile):
         f"{workdir}/pubwin_bloom_root", events_multifile, "user_id", kind="bloom"
     )
     sketch_dir = idx_dir.replace("file://", "") + "/sketch"
-    shutil.move(sketch_dir, sketch_dir + "_tmp")
+    shutil.move(sketch_dir, fsio.staged_dir(sketch_dir))
     with pytest.raises(FileNotFoundError, match="staged sibling"):
         build_mod.read_bloom_sketch(spark, idx_dir).count()
-    fsio.recover_publish(spark, sketch_dir + "_tmp", sketch_dir)
+    fsio.recover_publish(spark, fsio.staged_dir(sketch_dir), sketch_dir)
     assert build_mod.read_bloom_sketch(spark, idx_dir).count() > 0
 
 

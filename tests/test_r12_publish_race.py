@@ -27,6 +27,7 @@ import glob
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from elephant_twin_spark import Engine, col
 from elephant_twin_spark.sources import fsio, tables
@@ -106,8 +107,6 @@ def test_crashed_publish_fails_loudly_then_self_heals(spark, workdir):
     instead of early-returning the broken state forever."""
     import os
 
-    import pytest
-
     tbl = tables.materialize(
         spark, f"{SF_DIR}/events.parquet", f"{workdir}/pubcrash_events"
     )
@@ -150,3 +149,56 @@ def test_text_rebuild_reader_sees_complete_old_index(
     assert observed["count"] == truth
     assert eng.text_index(tbl, "text").count(q) == truth
     assert not glob.glob(f"{workdir}/pubrace_tidx/**/*.staging", recursive=True)
+
+
+def _crash_next_publish(monkeypatch):
+    """Make the next ``publish_dir`` delete its final dir and then raise
+    before the rename — the crashed state a later build or refresh must
+    heal. Later calls publish normally."""
+    real_publish = fsio.publish_dir
+
+    def crash(spark, tmp_dir, final_dir):
+        monkeypatch.setattr(fsio, "publish_dir", real_publish)
+        fsio.delete(spark, final_dir)
+        raise RuntimeError("simulated crash between delete and rename")
+
+    monkeypatch.setattr(fsio, "publish_dir", crash)
+
+
+@pytest.mark.parametrize("crashed", ["build", "refresh"])
+def test_crashed_publish_is_healed_by_the_other_writer(
+    spark, workdir, monkeypatch, crashed
+):
+    """Builds and refreshes stage at one name, so a refresh heals a
+    build's crashed publish and a build heals a refresh's: afterwards
+    the index answers as the full scan does."""
+    from elephant_twin_spark.streaming import refresh
+
+    tbl = tables.materialize(
+        spark, f"{SF_DIR}/events.parquet", f"{workdir}/heal_{crashed}_events"
+    )
+    root = f"{workdir}/heal_{crashed}_idx"
+    eng = Engine(spark, root)
+    eng.build_index(tbl, "event_type", num_buckets=4)
+
+    def land_file():
+        src = sorted(glob.glob(f"{tbl}/*.parquet"))[0]
+        shutil.copy(src, f"{tbl}/late_landing.parquet")
+        spark.catalog.refreshByPath(tbl)
+
+    if crashed == "build":
+        _crash_next_publish(monkeypatch)
+        with pytest.raises(RuntimeError, match="simulated"):
+            eng.build_index(tbl, "event_type", num_buckets=4)
+        land_file()
+        out = refresh.refresh_block_index(spark, tbl, "event_type", root)
+        assert out["mode"] == "incremental"
+    else:
+        land_file()
+        _crash_next_publish(monkeypatch)
+        with pytest.raises(RuntimeError, match="simulated"):
+            refresh.refresh_block_index(spark, tbl, "event_type", root)
+        eng.build_index(tbl, "event_type", num_buckets=4, overwrite=False)
+
+    truth = spark.read.parquet(tbl).where(F.col("event_type") == "click").count()
+    assert eng.query(tbl, col("event_type") == "click").count() == truth

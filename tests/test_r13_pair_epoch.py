@@ -244,48 +244,3 @@ def test_uncommitted_staging_is_never_published(spark, workdir):
     assert fsio.staging_committed(spark, ok)
     os.makedirs(f"{ok}/batch_run=compact--1/_temporary", exist_ok=True)
     assert not fsio.staging_committed(spark, ok)
-
-
-def test_legacy_compact_staging_name_is_recovered(spark, workdir):
-    """r12 renamed the sketch-rollup compaction staging dir from
-    '_compact_tmp' to '_tmp'; a publish that crashed under the OLD name
-    before the upgrade left the sink absent with data stranded at
-    <sink>_compact_tmp — neither diagnosed nor healed (r12 advisor).
-    compact_sketch_rollup now probes the legacy name once."""
-    import os
-
-    from elephant_twin_spark.streaming import windows
-
-    sink = f"{workdir}/legacy_sketch_sink"
-    from elephant_twin_spark.functions import sketches
-
-    ev = tables.load_raw(spark, f"{SF_DIR}/events.parquet").limit(500)
-    part = (
-        ev.groupBy(
-            F.window(F.col("ts"), "1 hour").alias("w"),
-            F.col("event_type").alias("key"),
-        )
-        .agg(
-            sketches.hll_sketch(F.col("user_id"), 12).alias("sketch"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.col("w.start").alias("win_start"),
-            F.col("w.end").alias("win_end"),
-            "key",
-            "sketch",
-            "n_rows",
-        )
-    )
-    # the crashed pre-upgrade state: data complete under the LEGACY
-    # staging name, sink dir absent
-    part.coalesce(1).write.mode("overwrite").parquet(
-        f"{sink}_compact_tmp/batch_run=compact--1"
-    )
-    assert not os.path.exists(sink)
-
-    n = windows.compact_sketch_rollup(spark, sink)
-    assert n > 0
-    assert os.path.exists(sink)
-    assert not os.path.exists(f"{sink}_compact_tmp")
-    assert windows.read_sketch_rollup(spark, sink).count() == n

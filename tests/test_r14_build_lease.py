@@ -10,10 +10,6 @@ staleness takeover) turns that interleaving into a loud
 ``BuildLeaseHeld``. Reference analog: the per-file indexing job's
 hasPreviousIndex overwrite-skip
 (core/indexing/AbstractBlockIndexingJob.java:176-312).
-
-Also pins the r13-advisor recover_pair fix: a stale committed ``_tmp``
-sibling must not SHADOW the ``.staging`` that carries the epoch which
-completes an interrupted pair publish.
 """
 
 import json
@@ -128,40 +124,12 @@ def test_crashed_builder_leaves_recoverable_lease(spark, workdir, monkeypatch):
     assert res.index_dir
 
 
-# ------------------------------------------ recover_pair sibling shadow
+# ------------------------------------------ recover_pair unhealable pair
 
 def _write_tiny(spark, path: str, tag: str) -> None:
     spark.createDataFrame([(tag,)], "tag string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
-
-
-def test_recover_pair_stale_tmp_does_not_shadow_staging(spark, workdir):
-    """ADVICE r13: pair (A, B); a full rebuild published A at epoch E2
-    and crashed between the renames, so B still serves the OLD epoch E1
-    while ``B.staging`` (committed, epoch E2) holds the missing half.
-    An ABORTED earlier refresh also left a committed stale ``B_tmp`` at
-    epoch E1. First-sibling-wins used to pick the ``_tmp``, find no
-    epoch path to consistency, and raise "rebuild the index" although
-    ``B.staging`` could heal the pair."""
-    a, b = f"{workdir}/pair_shadow/a", f"{workdir}/pair_shadow/b"
-    _write_tiny(spark, a, "a-new")
-    _write_tiny(spark, b, "b-old")
-    _write_tiny(spark, f"{b}.staging", "b-new")
-    _write_tiny(spark, f"{b}_tmp", "b-stale-refresh")
-    fsio.stamp_pair_epoch(spark, a, "E2")
-    fsio.stamp_pair_epoch(spark, b, "E1")
-    fsio.stamp_pair_epoch(spark, f"{b}.staging", "E2")
-    fsio.stamp_pair_epoch(spark, f"{b}_tmp", "E1")
-
-    assert fsio.pair_mismatch(spark, [a, b])
-    assert fsio.recover_pair(spark, [a, b]) is True
-    assert not fsio.pair_mismatch(spark, [a, b])
-    assert fsio.read_pair_epoch(spark, b) == "E2"
-    assert spark.read.parquet(b).first()["tag"] == "b-new"
-    # consistent state cleans every leftover staged sibling
-    assert not fsio.exists(spark, f"{b}_tmp")
-    assert not fsio.exists(spark, f"{b}.staging")
 
 
 def test_recover_pair_still_raises_when_unhealable(spark, workdir):
@@ -170,10 +138,10 @@ def test_recover_pair_still_raises_when_unhealable(spark, workdir):
     a, b = f"{workdir}/pair_dead/a", f"{workdir}/pair_dead/b"
     _write_tiny(spark, a, "a-new")
     _write_tiny(spark, b, "b-old")
-    _write_tiny(spark, f"{b}_tmp", "b-stale-refresh")
+    _write_tiny(spark, fsio.staged_dir(b), "b-stale-refresh")
     fsio.stamp_pair_epoch(spark, a, "E2")
     fsio.stamp_pair_epoch(spark, b, "E1")
-    fsio.stamp_pair_epoch(spark, f"{b}_tmp", "E0")
+    fsio.stamp_pair_epoch(spark, fsio.staged_dir(b), "E0")
 
     with pytest.raises(OSError, match="rebuild the index"):
         fsio.recover_pair(spark, [a, b])
@@ -222,7 +190,7 @@ def test_text_handle_revalidate_after_rebuild(spark, workdir):
 def test_refresh_refused_while_builder_holds_lease(spark, workdir):
     """Refreshers take the same writer lease as full builders: a refresh
     starting while a build (or another refresh) is mid-publish must fail
-    loudly — both refreshes share one *_tmp staged path, and a refresh
+    loudly — both refreshes share one staged path, and a refresh
     interleaving a build could publish stale-generation postings over
     the build's output."""
     from elephant_twin_spark.streaming import refresh as refresh_mod

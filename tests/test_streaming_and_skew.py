@@ -561,15 +561,15 @@ def test_cms_rollup_stream_equals_batch_sketch(spark, workdir, events_multifile)
 
 
 def test_crashed_compaction_publish_is_diagnosed_and_healed(spark, workdir):
-    """r12 review: the compaction staging dir now uses the house _tmp
-    sibling convention, so a publish crashed between delete and rename
-    is DIAGNOSED by name on read (require_published — previously a
-    bare parquet path-not-found) and HEALED by the next compaction's
-    recover_publish."""
+    """The compaction stages at the one staged-sibling name, so a
+    publish crashed between delete and rename is DIAGNOSED by name on
+    read (require_published — not a bare parquet path-not-found) and
+    HEALED by the next compaction's recover_publish."""
     import os
 
     import pytest
 
+    from elephant_twin_spark.sources import fsio
     from elephant_twin_spark.streaming import windows as w
 
     sink = f"{workdir}/sketch_crash_sink"
@@ -595,7 +595,7 @@ def test_crashed_compaction_publish_is_diagnosed_and_healed(spark, workdir):
     }
 
     w.compact_sketch_rollup(spark, sink)
-    os.rename(sink, f"{sink}_tmp")  # the crashed delete->rename state
+    os.rename(sink, fsio.staged_dir(sink))  # the crashed delete->rename state
 
     with pytest.raises(FileNotFoundError, match="recover_publish"):
         w.read_sketch_rollup(spark, sink).collect()
@@ -607,4 +607,4 @@ def test_crashed_compaction_publish_is_diagnosed_and_healed(spark, workdir):
         for r in w.read_sketch_rollup(spark, sink).collect()
     }
     assert healed == truth
-    assert not os.path.exists(f"{sink}_tmp")
+    assert not os.path.exists(fsio.staged_dir(sink))
