@@ -73,31 +73,23 @@ class _SFState:
             )
         return self._events
 
-    def ensure_block_index(self, table_path: str, column: str) -> None:
-        idx_dir = catalog.index_dir(self.engine.index_root, table_path, column, "block")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, table_path)
-            if desc.fresh_files(live) == {p for p, _, _ in live}:
-                return
-        self.engine.build_index(table_path, column, num_buckets=4)
-
-    def ensure_text_index(self, table_path: str, text_col: str, id_col: str) -> None:
-        idx_dir = catalog.index_dir(self.engine.index_root, table_path, text_col, "text")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, table_path)
-            if desc.fresh_files(live) == {p for p, _, _ in live}:
-                return
-        self.engine.build_text_index(table_path, text_col, id_col)
-
     def _index_is_fresh(self, table_path: str, column: str, kind: str = "block") -> bool:
+        """The index has a descriptor, and it is fresh against a live
+        listing of ``table_path``."""
         idx_dir = catalog.index_dir(self.engine.index_root, table_path, column, kind)
         desc = catalog.read_descriptor(self.spark, idx_dir)
         if desc is None:
             return False
         live = fsio.list_data_files(self.spark, table_path)
         return desc.fresh_files(live) == {p for p, _, _ in live}
+
+    def ensure_block_index(self, table_path: str, column: str) -> None:
+        if not self._index_is_fresh(table_path, column):
+            self.engine.build_index(table_path, column, num_buckets=4)
+
+    def ensure_text_index(self, table_path: str, text_col: str, id_col: str) -> None:
+        if not self._index_is_fresh(table_path, text_col, "text"):
+            self.engine.build_text_index(table_path, text_col, id_col)
 
     def indexed_events(self) -> str:
         p = self.events
@@ -107,22 +99,12 @@ class _SFState:
         return p
 
     def ensure_bloom_index(self, table_path: str, column: str) -> None:
-        idx_dir = catalog.index_dir(self.engine.index_root, table_path, column, "bloom")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, table_path)
-            if desc.fresh_files(live) == {p for p, _, _ in live}:
-                return
-        self.engine.build_bloom_index(table_path, column)
+        if not self._index_is_fresh(table_path, column, "bloom"):
+            self.engine.build_bloom_index(table_path, column)
 
     def ensure_zone_index(self, table_path: str, column: str) -> None:
-        idx_dir = catalog.index_dir(self.engine.index_root, table_path, column, "zone")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, table_path)
-            if desc.fresh_files(live) == {p for p, _, _ in live}:
-                return
-        self.engine.build_zone_index(table_path, column)
+        if not self._index_is_fresh(table_path, column, "zone"):
+            self.engine.build_zone_index(table_path, column)
 
     def docs_text_index(self):
         p = f"{self.sf_dir}/documents.parquet"
@@ -131,13 +113,7 @@ class _SFState:
 
     def emb_ann_index(self):
         p = f"{self.sf_dir}/embeddings.parquet"
-        idx_dir = catalog.index_dir(self.engine.index_root, p, "embedding", "ivf")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        rebuild = True
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, p)
-            rebuild = desc.fresh_files(live) != {q for q, _, _ in live}
-        if rebuild:
+        if not self._index_is_fresh(p, "embedding", "ivf"):
             self.engine.build_ann_index(p, "embedding", "vec_id", nlist=8, max_iter=3)
         return self.engine.ann_index(p, "embedding")
 
@@ -145,13 +121,7 @@ class _SFState:
         """Persisted LSH bucket index over documents (md5 hashing so the
         bucket assignment is oracle-reproducible)."""
         p = f"{self.sf_dir}/documents.parquet"
-        idx_dir = catalog.index_dir(self.engine.index_root, p, "text", "lsh")
-        desc = catalog.read_descriptor(self.spark, idx_dir)
-        rebuild = True
-        if desc is not None:
-            live = fsio.list_data_files(self.spark, p)
-            rebuild = desc.fresh_files(live) != {q for q, _, _ in live}
-        if rebuild:
+        if not self._index_is_fresh(p, "text", "lsh"):
             self.engine.build_lsh_index(
                 p, "text", "doc_id", num_perm=4, num_bands=2, shingle_k=1, hash_fn="md5"
             )

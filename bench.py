@@ -615,10 +615,11 @@ def main():
     # ---- row groups within the survivors (bloom). The sf tables are
     # ---- too small/dense for row-group pruning to register (one row
     # ---- group per file, every key in every file), so the probe uses
-    # ---- the same deterministic adversarial layout shape as
-    # ---- tools/subfile_prune_ab.py, scaled to bench time: 1.2M rows /
-    # ---- 8 files / 4 row groups per file / ~130 MB, key uniform over
-    # ---- 600k values (~2 rows per key, row-group min/max useless
+    # ---- the same deterministic adversarial layout shape as the r14
+    # ---- sub-file pruning A/B (SCALE_EXPERIMENTS.md), scaled to bench
+    # ---- time: 1.2M rows / 8 files / 4 row groups per file / ~130 MB,
+    # ---- key uniform over 600k values (~2 rows per key, row-group
+    # ---- min/max useless
     # ---- everywhere). Bytes are measured at the OS level (/proc rchar
     # ---- — Hadoop's Statistics undercounts Spark 4's vectored-IO path,
     # ---- SCALE_EXPERIMENTS.md r14), so the ratio includes footer,

@@ -605,7 +605,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 50,
-    detector: str = "auto",
     hop_after: int = 3,
 ) -> DataFrame:
     """``(node, component)`` over the undirected graph of ``pairs`` —
@@ -638,6 +637,13 @@ def connected_components(
     and the bench-graph A/B shows the hop join is pure overhead there
     (warm 1.11 s plain vs 1.30 s always-on doubling).
 
+    Raises ``RuntimeError`` when ``max_iter`` rounds end with labels
+    still changing, after freeing the loop's checkpoints: unconverged
+    labels would silently split components. Convergence is seen in the
+    round that changes no label, one round after the fixpoint is
+    reached, so ``max_iter`` must cover that round too: a graph whose
+    labels settle exactly in round ``max_iter`` also raises.
+
     Memory lifecycle: the returned labels are backed by the final
     iteration's checkpoint (escaped from ambient scopes so the result
     survives them). In a long-lived session, free its blocks with
@@ -667,30 +673,16 @@ def connected_components(
     # aggregation per round suffices. float/double ids are excluded — a
     # decimal(38,0) cast rounds, so a real label change (2.4→2.2) can
     # leave the sum unchanged and converge prematurely; they take the
-    # join+count change detector, as do non-numeric (string) ids.
-    # ``detector`` forces one variant ("sum"/"join") for A/B benching;
-    # "auto" picks as above. r3 A/B at sf0.1, CC step isolated on
-    # checkpointed pairs, back-to-back warm reps: sum 0.76-0.88 s vs
-    # join 0.87-1.01 s — label-sum kept; the r2 q_near_dup_clusters
-    # regression is NOT in this step (CC is ~1 s of the ~9 s query).
+    # join+count change detector, as do non-numeric (string) ids. Where
+    # both apply, the label-sum measured faster (sf0.1, CC step alone:
+    # 0.76-0.88 s vs 0.87-1.01 s for join+count).
     comp_type = dict(labels.dtypes)["comp"]
     # decimals only with scale 0: decimal(p, s>0) ids round under the
     # decimal(38,0) sum cast — the same premature-convergence hazard as
     # float/double
-    integral = comp_type in {
+    numeric = comp_type in {
         "tinyint", "smallint", "int", "bigint",
     } or bool(re.fullmatch(r"decimal\(\d+,0\)", comp_type))
-    if detector == "auto":
-        use_sum = integral
-    elif detector == "sum":
-        if not integral:
-            raise ValueError(f"label-sum detector needs integral ids, got {comp_type}")
-        use_sum = True
-    elif detector == "join":
-        use_sum = False
-    else:
-        raise ValueError(detector)
-    numeric = use_sum
 
     def label_sum(l: DataFrame):
         return l.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
@@ -763,6 +755,11 @@ def connected_components(
             labels = new
             if converged:
                 break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter={max_iter} "
+                "rounds; raise max_iter"
+            )
     except Exception:
         lifecycle.release(labels)
         lifecycle.release(edges)

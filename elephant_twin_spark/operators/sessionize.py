@@ -114,9 +114,10 @@ def funnel(
     ``lifecycle.checkpoint_scope`` or ``release`` it).
 
     The default is the MEASURED winner, not the assumed one
-    (tools/ab_funnel.py, 3M-row 10x corpus + 2M-event hot key, 13%
-    later-stage selectivity, local[32]): re-scan steady 0.78-0.90 s vs
-    pinned steady 1.18-1.38 s on a base-table input, and re-scan
+    (SCALE_EXPERIMENTS.md, "r11: funnel scan-shape A/B": 3M-row 10x
+    corpus + 2M-event hot key, 13% later-stage selectivity, local[32]):
+    re-scan steady 0.78-0.90 s vs pinned steady 1.18-1.38 s on a
+    base-table input, and re-scan
     5.5 s vs pinned 10.0-11.1 s even on an EXPENSIVE window-derived
     input — the pin's eager materialization is itself one full
     evaluation of the upstream plan plus block-manager I/O, which

@@ -255,9 +255,8 @@ def require_published(spark: SparkSession, final_dir: str) -> None:
             f"{final_dir} is missing but its staged sibling "
             f"{tmp_dir} exists: a build/refresh is publishing "
             "right now, or crashed between delete and rename. "
-            "The staged data is complete — re-run the build (a "
-            "refresh heals it only when it has files to index or "
-            "drop), or call fsio.recover_publish(spark, "
+            "The staged data is complete — re-run the build/refresh, "
+            "or call fsio.recover_publish(spark, "
             f"{tmp_dir!r}, {final_dir!r}) to finish the publish."
         )
     raise FileNotFoundError(

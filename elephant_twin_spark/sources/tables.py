@@ -86,7 +86,7 @@ LAYOUT_VERSION = "2"  # bump to invalidate previously-materialized copies
 def bloom_filter_options(columns, expected_ndv: int = None) -> dict:
     """Writer options enabling a parquet BLOOM FILTER on ``columns`` —
     the measured sub-file pruning mechanism for UNCLUSTERED point-lookup
-    keys (r14 A/B, tools/subfile_prune_ab.py + SCALE_EXPERIMENTS.md):
+    keys (SCALE_EXPERIMENTS.md, "r14: sub-file pruning ACTION A/B"):
     row-group min/max can't prune a key that's uniform across the file,
     and ``_metadata.file_block_start`` range filters save NOTHING (they
     run per row, after the read — 410.7 vs 411.9 MB measured), but a

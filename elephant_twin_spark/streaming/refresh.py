@@ -32,7 +32,8 @@ atomic on generic filesystems; the sequence first runs
 and IVF dirs), which completes an interrupted publish from the
 surviving staged dir or sweeps a stale one. Builds and refreshes share
 the staged name, so any build or refresh heals a crashed publish of
-either — except a no-op refresh, which returns before the lease.
+either; a refresh with nothing to index or drop takes the lease for
+that only when a data dir is missing or a pair's epochs disagree.
 
 Delta parameters come from the DESCRIPTOR, not caller defaults: the
 block refresh re-applies the recorded ``key_expr`` / ``sample_fraction``
@@ -136,51 +137,58 @@ def _refresh(
             "mode": "full_build",
             "files_indexed": len(catalog.read_descriptor(spark, idx_dir).files),
         }
-    if d.new_or_changed or d.removed:
-        # The writer lease: builds and refreshes of one index stage at
-        # the same paths, so a second writer could gut the staged dir
-        # this one is about to rename, or publish a delta of a
-        # superseded generation over a rebuild. The lock-free diff above
-        # only decides the no-op; a rebuild can finish before the lease
-        # is acquired, so the rewrite uses the descriptor and listing
-        # re-read under it — a delta computed with the old options
-        # (key_expr, tokenizer, sketch width) against the new index
-        # would mix keyings within one table and publish a descriptor
-        # reverting the rebuild's options.
-        with fsio.build_lease(spark, idx_dir) as lease_owner:
-            d = _diff(spark, idx_dir, table_path)
-            if d is None:
-                raise FileNotFoundError(
-                    f"index at {idx_dir} disappeared while acquiring its writer "
-                    "lease (concurrent teardown?) — rebuild, then re-run the refresh"
-                )
-            if d.new_or_changed or d.removed:
-                finals = [f"{idx_dir}/{name}" for name in dirs]
-                if len(finals) > 1:
-                    # a per-dir recovery would DELETE a staged dir that is
-                    # the only copy of an interrupted paired publish's half
-                    fsio.recover_pair(spark, finals)
-                else:
-                    fsio.recover_publish(spark, fsio.staged_dir(finals[0]), finals[0])
-                rewrite(d)
-                fsio.fence_and_publish(spark, idx_dir, lease_owner, d.staged)
-                if published is not None:
-                    published(d)
-                new_desc = catalog.make_descriptor(
-                    source_path=table_path,
-                    column=column,
-                    index_type=d.desc.index_type,
-                    num_buckets=d.desc.num_buckets,
-                    files=d.live,
-                    options=d.options,
-                )
-                catalog.write_descriptor(spark, idx_dir, new_desc)
-                return {
-                    "mode": "incremental",
-                    "files_indexed": len(d.new_or_changed),
-                    "files_removed": len(d.removed),
-                }
-    return {"mode": "noop", "files_indexed": 0}
+    finals = [f"{idx_dir}/{name}" for name in dirs]
+    # a no-op returns before the lease only when no interrupted publish
+    # is left to heal: every data dir live and a pair's epoch markers
+    # agreeing (filesystem calls only, no Spark job)
+    if (
+        not (d.new_or_changed or d.removed)
+        and all(fsio.exists(spark, f) for f in finals)
+        and not (len(finals) > 1 and fsio.pair_mismatch(spark, finals))
+    ):
+        return {"mode": "noop", "files_indexed": 0}
+    # The writer lease: builds and refreshes of one index stage at the
+    # same paths, so a second writer could gut the staged dir this one
+    # is about to rename, or publish a delta of a superseded generation
+    # over a rebuild. The lock-free diff above only decides the no-op; a
+    # rebuild can finish before the lease is acquired, so the rewrite
+    # uses the descriptor and listing re-read under it — a delta
+    # computed with the old options (key_expr, tokenizer, sketch width)
+    # against the new index would mix keyings within one table and
+    # publish a descriptor reverting the rebuild's options.
+    with fsio.build_lease(spark, idx_dir) as lease_owner:
+        d = _diff(spark, idx_dir, table_path)
+        if d is None:
+            raise FileNotFoundError(
+                f"index at {idx_dir} disappeared while acquiring its writer "
+                "lease (concurrent teardown?) — rebuild, then re-run the refresh"
+            )
+        if len(finals) > 1:
+            # a per-dir recovery would DELETE a staged dir that is the
+            # only copy of an interrupted paired publish's half
+            fsio.recover_pair(spark, finals)
+        else:
+            fsio.recover_publish(spark, fsio.staged_dir(finals[0]), finals[0])
+        if not (d.new_or_changed or d.removed):
+            return {"mode": "noop", "files_indexed": 0}
+        rewrite(d)
+        fsio.fence_and_publish(spark, idx_dir, lease_owner, d.staged)
+        if published is not None:
+            published(d)
+        new_desc = catalog.make_descriptor(
+            source_path=table_path,
+            column=column,
+            index_type=d.desc.index_type,
+            num_buckets=d.desc.num_buckets,
+            files=d.live,
+            options=d.options,
+        )
+        catalog.write_descriptor(spark, idx_dir, new_desc)
+    return {
+        "mode": "incremental",
+        "files_indexed": len(d.new_or_changed),
+        "files_removed": len(d.removed),
+    }
 
 
 def refresh_block_index(

@@ -165,13 +165,14 @@ def _crash_next_publish(monkeypatch):
     monkeypatch.setattr(fsio, "publish_dir", crash)
 
 
-@pytest.mark.parametrize("crashed", ["build", "refresh"])
+@pytest.mark.parametrize("crashed", ["build", "refresh", "noop-refresh"])
 def test_crashed_publish_is_healed_by_the_other_writer(
     spark, workdir, monkeypatch, crashed
 ):
     """Builds and refreshes stage at one name, so a refresh heals a
     build's crashed publish and a build heals a refresh's: afterwards
-    the index answers as the full scan does."""
+    the index answers as the full scan does. ``noop-refresh``: a refresh
+    with no file to index or drop still heals a crashed rebuild."""
     from elephant_twin_spark.streaming import refresh
 
     tbl = tables.materialize(
@@ -186,19 +187,62 @@ def test_crashed_publish_is_healed_by_the_other_writer(
         shutil.copy(src, f"{tbl}/late_landing.parquet")
         spark.catalog.refreshByPath(tbl)
 
-    if crashed == "build":
-        _crash_next_publish(monkeypatch)
-        with pytest.raises(RuntimeError, match="simulated"):
-            eng.build_index(tbl, "event_type", num_buckets=4)
-        land_file()
-        out = refresh.refresh_block_index(spark, tbl, "event_type", root)
-        assert out["mode"] == "incremental"
-    else:
+    if crashed == "refresh":
         land_file()
         _crash_next_publish(monkeypatch)
         with pytest.raises(RuntimeError, match="simulated"):
             refresh.refresh_block_index(spark, tbl, "event_type", root)
         eng.build_index(tbl, "event_type", num_buckets=4, overwrite=False)
+    else:
+        _crash_next_publish(monkeypatch)
+        with pytest.raises(RuntimeError, match="simulated"):
+            eng.build_index(tbl, "event_type", num_buckets=4)
+        if crashed == "build":
+            land_file()
+        out = refresh.refresh_block_index(spark, tbl, "event_type", root)
+        assert out["mode"] == ("incremental" if crashed == "build" else "noop")
 
     truth = spark.read.parquet(tbl).where(F.col("event_type") == "click").count()
     assert eng.query(tbl, col("event_type") == "click").count() == truth
+
+
+def test_noop_refresh_heals_a_pair_crashed_between_renames(
+    spark, workdir, monkeypatch
+):
+    """A rebuild of a paired index (text postings + doclens) that
+    crashes after its first rename leaves both dirs live with
+    mismatched epochs; BM25 queries raise until a writer heals it. A refresh
+    with no file to index or drop heals it too and returns ``noop``."""
+    from elephant_twin_spark.streaming import refresh
+
+    tbl = tables.materialize(
+        spark, f"{SF_DIR}/documents.parquet", f"{workdir}/pairheal_docs"
+    )
+    root = f"{workdir}/pairheal_tidx"
+    eng = Engine(spark, root)
+    eng.build_text_index(tbl, "text", "doc_id")
+
+    def bm25_top():
+        return eng.text_index(tbl, "text").top_n("the", 10, scoring="bm25").collect()
+
+    truth = bm25_top()
+
+    real_publish = fsio.publish_dir
+    calls = []
+
+    def crash_second(spark, tmp_dir, final_dir):
+        calls.append(final_dir)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash between the pair's renames")
+        real_publish(spark, tmp_dir, final_dir)
+
+    monkeypatch.setattr(fsio, "publish_dir", crash_second)
+    with pytest.raises(RuntimeError, match="simulated"):
+        eng.build_text_index(tbl, "text", "doc_id")
+    monkeypatch.setattr(fsio, "publish_dir", real_publish)
+    with pytest.raises(RuntimeError, match="MISMATCHED"):
+        bm25_top()
+
+    out = refresh.refresh_text_index(spark, tbl, "text", root)
+    assert out["mode"] == "noop"
+    assert bm25_top() == truth

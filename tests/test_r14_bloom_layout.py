@@ -1,7 +1,7 @@
 """Write-time parquet bloom filters — the measured sub-file pruning
 mechanism for unclustered point-lookup keys (r13 verdict item 2).
 
-The r14 A/B (tools/subfile_prune_ab.py, results in SCALE_EXPERIMENTS.md)
+The r14 A/B (SCALE_EXPERIMENTS.md, "r14: sub-file pruning ACTION A/B")
 settled the one open design delta vs the reference's byte-range splits
 (core/retrieval/BlockIndexedFileInputFormat.java:189-241):
 

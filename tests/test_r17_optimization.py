@@ -13,6 +13,8 @@ from elephant_twin_spark.operators import text as text_mod
 from elephant_twin_spark.operators.pipeline import dedup
 from elephant_twin_spark.sources import fsio
 
+from conftest import settled_rdd_count, wait_storage
+
 PARAMS = dict(num_perm=8, num_bands=4, shingle_k=2)
 
 
@@ -112,6 +114,23 @@ def test_cc_chain_beyond_max_iter_now_exact(spark):
     lifecycle.release(out)
     assert len(rows) == 121
     assert {r["component"] for r in rows} == {0}
+
+
+def test_cc_not_converged_within_max_iter_raises_and_releases(spark):
+    """The same chain with max_iter=3 (plain rounds only) cannot
+    converge: the call raises instead of returning split components,
+    and its checkpoints leave the block manager."""
+    pairs = spark.range(120).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    base_rdds = settled_rdd_count(spark)
+    base_blocks = lifecycle.storage_snapshot(spark)["n_blocks"]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=3)
+    snap = wait_storage(
+        spark, lambda s: s["n_rdds"] <= base_rdds and s["n_blocks"] <= base_blocks
+    )
+    assert snap["n_rdds"] <= base_rdds and snap["n_blocks"] <= base_blocks, snap
 
 
 def test_cc_doubling_identical_to_plain_on_converging_graph(spark):

@@ -4,11 +4,18 @@ row count + column names + order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 (with query names given, only those queries are checked)
+
+Indexes and table copies are built in a fresh temporary work dir,
+removed at exit, unless ``ETS_WORKDIR`` is set: a reused work dir holds
+indexes an earlier process built, and a run over it builds none.
 """
 
+import atexit
 import os
+import shutil
 import struct
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -55,7 +62,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return c2.sort_values(by=list(c2.columns)).reset_index(drop=True)
 
 
+def fresh_workdir() -> None:
+    """Point ``__spark_entry__``'s work dir (``ETS_WORKDIR``, read when
+    it is imported) at a new temporary dir, removed at exit, unless the
+    caller set one."""
+    if not os.environ.get("ETS_WORKDIR"):
+        work = tempfile.mkdtemp(prefix="ets_entry_")
+        os.environ["ETS_WORKDIR"] = work
+        atexit.register(shutil.rmtree, work, True)
+
+
 def main():
+    fresh_workdir()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from pyspark.sql import SparkSession
 

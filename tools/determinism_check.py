@@ -12,6 +12,8 @@ under-specified sort) at THIS data: a real knife-edge, not a
 hypothetical, because the driver runs the same sf0.01 parquet.
 
 Usage: python tools/determinism_check.py [sf_dir] [query ...]
+(index store: a fresh temporary work dir unless ``ETS_WORKDIR`` is set,
+as in check_oracle; the second session reuses what the first built)
 """
 
 import os
@@ -19,7 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from check_oracle import canon  # noqa: E402  (tools/ sibling import)
+from check_oracle import canon, fresh_workdir  # noqa: E402  (tools/ sibling import)
 
 
 def _run_all(shuffle_partitions: int, sf_dir: str, only, extra_conf=None):
@@ -54,6 +56,7 @@ def _run_all(shuffle_partitions: int, sf_dir: str, only, extra_conf=None):
 
 
 def main():
+    fresh_workdir()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     axis = os.environ.get("ETS_DETERMINISM_AXIS", "partitions")

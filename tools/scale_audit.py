@@ -93,7 +93,8 @@ COMPOSITE = {
     "funnel_stages": (
         "composite: n user-keyed min-aggregation passes (map-side combined, "
         "one timestamp of state per group per pass) + user-keyed spine "
-        "joins — the MEASURED winner shape (tools/ab_funnel.py); no "
+        "joins — the MEASURED winner shape (SCALE_EXPERIMENTS.md, r11 "
+        "funnel A/B); no "
         "exchange carries raw events past its pass aggregation"
     ),
 }
