@@ -480,45 +480,27 @@ def main():
         .save()
     )
 
-    # clean_corpus / near_dup_clusters back their RESULTS with escaped
-    # checkpoints (they survive the per-rep scope by design); release
-    # through the consumed result keeps bench storage flat across reps
-    # — the same discipline a long-lived production driver runs (r8:
-    # release() walks derived plans)
-    def _consume_release(df, consume):
-        out = consume(df)
-        lifecycle.release(df)
-        return out
-
     # deterministic gates + exact dedup; the near-dup stage is timed
     # separately by q_near_dup_clusters (no double-counting)
     timed("q_clean_corpus")(
-        lambda: _consume_release(
-            __import__(
-                "elephant_twin_spark.operators.pipeline.clean", fromlist=["clean"]
-            ).clean_corpus(docs, "text", "doc_id", near_dup=False)[1],
-            lambda df: df.groupBy("reason").count().collect(),
-        )
+        lambda: __import__(
+            "elephant_twin_spark.operators.pipeline.clean", fromlist=["clean"]
+        ).clean_corpus(docs, "text", "doc_id", near_dup=False)[1]
+        .groupBy("reason").count().collect()
     )
     # all_pairs pinned for round-over-round comparability with r1-r3
     timed("q_near_dup_clusters")(
-        lambda: _consume_release(
-            dedup.near_dup_clusters(
-                docs, "text", "doc_id", num_perm=16, num_bands=4, threshold=0.7,
-                edge_mode="all_pairs",
-            ),
-            lambda df: df.where("NOT is_canonical").count(),
-        )
+        lambda: dedup.near_dup_clusters(
+            docs, "text", "doc_id", num_perm=16, num_bands=4, threshold=0.7,
+            edge_mode="all_pairs",
+        ).where("NOT is_canonical").count()
     )
     # star = the (now default) linear-candidate scale path
     timed("q_near_dup_clusters_star")(
-        lambda: _consume_release(
-            dedup.near_dup_clusters(
-                docs, "text", "doc_id", num_perm=16, num_bands=4, threshold=0.7,
-                edge_mode="star",
-            ),
-            lambda df: df.where("NOT is_canonical").count(),
-        )
+        lambda: dedup.near_dup_clusters(
+            docs, "text", "doc_id", num_perm=16, num_bands=4, threshold=0.7,
+            edge_mode="star",
+        ).where("NOT is_canonical").count()
     )
     timed("q_quality_stats")(
         lambda: textstats.quality_score(docs, "text").agg(F.avg("quality_score")).collect()

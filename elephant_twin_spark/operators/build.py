@@ -113,8 +113,9 @@ def write_range_partitioned(
 
 def run_pinned_with_retry(df: DataFrame, span) -> None:
     """Run ``span(pinned)`` over a localCheckpoint-pinned copy of
-    ``df``, falling back ONCE to ``span(df)`` (the original
-    recomputable plan) on lost checkpoint blocks.
+    ``df`` inside its own :func:`.lifecycle.checkpoint_scope`, falling
+    back ONCE to ``span(df)`` (the original recomputable plan) on lost
+    checkpoint blocks.
 
     This is the shared fault-tolerance scaffold for every pinned
     write (``write_range_partitioned``'s pin_input=True path,
@@ -126,27 +127,16 @@ def run_pinned_with_retry(df: DataFrame, span) -> None:
     would have recomputed. ``span`` must be overwrite-idempotent (all
     call sites are ``mode("overwrite")`` writes); the steady state
     keeps the evaluate-once saving, the rare lost-block case degrades
-    to the pre-pin cost instead of a failed job."""
-    pinned = lifecycle.pin(df, escape=True)
+    to the pre-pin cost instead of a failed job. The scope frees the
+    pin on both paths; its exit never masks the span's own error, and
+    a release failure after a healthy span surfaces."""
     try:
-        span(pinned)
+        with lifecycle.checkpoint_scope():
+            span(lifecycle.pin(df))
     except Exception as exc:  # noqa: BLE001 — classified below
-        # best-effort release inside the exception path ONLY: the same
-        # cluster instability that caused the failure can make the
-        # release walk fail too, and that must mask neither the
-        # original error nor the recomputable retry
-        try:
-            lifecycle.release(pinned)
-        except Exception:  # noqa: BLE001
-            pass
         if not _is_checkpoint_block_loss(exc):
             raise
         span(df)
-        return
-    # steady state: a real release failure here must SURFACE (a
-    # silently skipped release on every healthy build would be the
-    # documented long-session leak with no signal)
-    lifecycle.release(pinned)
 
 
 def _is_checkpoint_block_loss(exc: BaseException) -> bool:

@@ -1,33 +1,31 @@
-"""Checkpoint lifecycle: scoped release of ``localCheckpoint``'ed
-intermediates.
+"""Checkpoint lifecycle: every ``localCheckpoint`` pin has one owner.
 
 Several operators pin an intermediate with ``localCheckpoint`` so a
 shared subplan is materialized exactly once (minhash candidate tables,
-triangle-count edge sets, connected-components iterations, ANN audit
-inputs). The blocks behind a local checkpoint live in the block manager
-until the JVM garbage-collects the RDD object — which, in a long-lived
-session with a large heap, is effectively never. Across a 48-key bench
-run (or a real multi-query production session) those blocks accumulate,
-pressure the unified memory pool, and turn into execution-memory spills
-in UNRELATED later queries: a genuine long-session leak at 100 TB, not
-just bench hygiene (round-5 verdict finding on ``q_minhash_lsh``).
+triangle-count edge sets, connected-components rounds, the
+clean_corpus gate relation). The blocks behind a local checkpoint live
+in the block manager until the JVM garbage-collects the RDD object —
+in a long-lived session with a large heap, effectively never — so they
+accumulate and turn into execution-memory spills in unrelated later
+queries (round-5 verdict finding on ``q_minhash_lsh``).
 
-This module makes the lifecycle explicit and caller-owned:
+The rule: **the innermost active** :func:`checkpoint_scope` **owns
+every** :func:`pin` **made inside it and frees it on exit.** A
+DataFrame an operator returns — checkpoint-backed or not — stays valid
+until the caller's innermost scope exits; consume it inside that
+scope. With no active scope a pin is a plain unowned
+``localCheckpoint``. An operator whose result does not depend on its
+pins (one that collects to the driver) runs under its own scope.
 
-* operators call :func:`pin` instead of ``df.localCheckpoint()`` — same
-  semantics, plus registration with the innermost active scope (if any;
-  with no scope the behavior is byte-identical to before);
-* callers that know when consumption ends wrap the work in
-  :func:`checkpoint_scope` — on exit every checkpoint pinned inside is
-  released;
-* iterative algorithms call :func:`release` directly on a superseded
-  iteration the moment its successor is materialized (connected
-  components keeps exactly TWO iterations live instead of all of them).
+:func:`release` frees one pin early. The package calls it only on
+handles it pinned itself in the same function — connected components'
+superseded rounds, a raise path that will not consume its pin.
 
-IMPORTANT: a local checkpoint truncates lineage, so after
-:func:`release` the DataFrame CANNOT be recomputed — any further action
-on it raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Release strictly
-after the last consumption; scopes make that ordering structural.
+A local checkpoint truncates lineage: after release any action on a
+plan over it raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The one
+exception to the rule is the cache barrier: a checkpoint that a
+registered ``cache()`` still needs is never freed (see
+:func:`release`).
 """
 
 from __future__ import annotations
@@ -62,217 +60,68 @@ def _scopes() -> List[List[DataFrame]]:
     return _local.scopes
 
 
-def pin(df: DataFrame, eager: bool = True, escape: bool = False) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + register the pinned result with
-    the innermost active :func:`checkpoint_scope` (no-op registration
-    when no scope is active).
-
-    ``escape=True`` checkpoints WITHOUT registering: the checkpoint that
-    backs an operator's RETURNED DataFrame must survive the operator's
-    (or a caller's) enclosing scope, or consuming the result after the
-    scope exits hard-fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
-    instead of recomputing (round-6 advisor finding — lineage is
-    truncated, so release is unrecoverable). Escaped checkpoints are
-    caller-owned: free them with :func:`release` when done — release
-    works on the checkpointed DataFrame itself AND on any result
-    derived from it, so operators need not hand the raw handle back
-    (a caller-registered ``cache()`` over the result is a release
-    barrier, though — see :func:`release`)."""
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, owned by the innermost active
+    :func:`checkpoint_scope` (unowned when no scope is active). The
+    handle carries its checkpoint RDD — its plan is the ``LogicalRDD``
+    over it — so :func:`release` frees exactly that RDD."""
     out = df.localCheckpoint(eager)
-    if not escape:
-        scopes = _scopes()
-        if scopes:
-            scopes[-1].append(out)
+    out._ets_checkpoint = out._jdf.logicalPlan().rdd()
+    scopes = _scopes()
+    if scopes:
+        scopes[-1].append(out)
     return out
 
 
-def release(df: DataFrame, caches: bool = False) -> bool:
-    """Free the block-manager blocks behind EVERY ``localCheckpoint``
-    leaf in ``df``'s plan NOW (non-blocking unpersist). Returns True
-    iff at least one leaf actually holding blocks was freed.
+def release(pinned: DataFrame) -> bool:
+    """Free the checkpoint behind a handle :func:`pin` returned NOW
+    (non-blocking unpersist). Returns True iff blocks were freed;
+    releasing an already-freed handle returns False. Raises
+    ``TypeError`` for any other DataFrame — a derived plan's
+    checkpoints belong to the scope that pinned them.
 
-    Works on the checkpointed DataFrame itself AND on any DataFrame
-    DERIVED from one: operators that escape a checkpoint behind their
-    returned result (``clean_corpus``'s gate relation, the final
-    ``connected_components`` labels) hand back plans layered over the
-    checkpoint, so the caller's only handle IS the derived plan —
-    release walks the plan's leaves and unpersists each RDD-backed one
-    (round-7 verdict: the previous root-only implementation made those
-    escaped checkpoints permanently unreleasable).
-
-    A registered ``df.cache()`` is a BARRIER under the default
-    ``caches=False``: an RDD that any live cache still depends on is
-    never unpersisted. That is deliberate cluster-safety, not a
-    limitation (r8 advisor): the cache stays registered, and lineage
-    beneath it is truncated at the checkpoint — freeing the checkpoint
-    while keeping the cache turns the cache into a NON-RECOMPUTABLE
-    snapshot. Local mode never notices (buffers stay resident), but on
-    a real cluster any later cached-block loss (executor loss,
-    memory-pressure eviction) recomputes through the truncated lineage
-    and hard-fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` in a
-    query that looks nowhere near the release. There is no safe way to
-    keep a registered cache over freed truncated lineage, so the
-    default refuses to create one.
-
-    The barrier is GLOBAL, not plan-local (r9 review finding): a cache
-    registered on a SIBLING result that shares the checkpoint — e.g.
-    ``clean_corpus`` returns ``(cleaned, audit)`` over one gate
-    checkpoint, and the caller does ``cleaned.cache()`` then
-    ``release(audit)`` — protects the shared checkpoint even though no
-    cache appears anywhere in the released plan. The protected set is
-    read from the session's CacheManager registry; if that (private,
-    reflection-read) registry is unreachable on some future Spark, the
-    walk degrades to the plan-local barrier with a warning.
-
-    ``caches=True`` is the explicit TEARDOWN signal — "I own every
-    cache under this plan and I am done with this result": the walk
-    proceeds through cache leaves (pending or materialized), frees the
-    checkpoints beneath them, and drops any materialized buffers.
-    Caches NOT under the released plan still protect their RDDs —
-    ownership extends exactly to the plan you pass. The torn-down
-    cache entries stay registered; whether later use works depends on
-    what was underneath — a cache over a plain source plan (e.g.
-    ``jsonl_audit``'s parsed relation) recomputes and re-caches, while
-    a cache over a freed checkpoint cannot materialize again (teardown
-    means no further reads). It is OFF by default on ownership grounds:
-    a cache under a derived plan is usually the CALLER's input cache
-    (``docs.cache()`` reused across queries).
-
-    Releases every checkpoint under the plan, including one the CALLER
-    pinned and joined in — release only when all consumers of every
-    underlying checkpoint are done. Leaf-kind probing catches only the
-    py4j "method does not exist" signal; real JVM failures propagate
-    instead of being silently swallowed as a skipped leaf."""
-    from py4j.protocol import Py4JError, Py4JJavaError
-
-    try:
-        # withCachedData, not analyzed: cache substitution happens there,
-        # so df.cache() leaves surface as InMemoryRelation; checkpoint
-        # LogicalRDD leaves pass through unchanged. Walk a FRESH
-        # QueryExecution (df.alias creates a new Dataset over the same
-        # plan): Dataset memoizes its queryExecution, so walking
-        # df._jdf's own would see the cache registry as of the df's
-        # FIRST action — a cache the caller since unpersisted would
-        # still read as a barrier (silent leak), and a cache registered
-        # later would be missed and freed out from under the caller.
-        probe = df.alias("_ets_release_probe")
-        leaves = probe._jdf.queryExecution().withCachedData().collectLeaves()
-    except Py4JJavaError:
-        raise
-    except Py4JError:
+    A registered ``df.cache()`` anywhere in the session is a BARRIER:
+    a checkpoint that some cache entry's plan reads (directly, through
+    a sibling result, or through a subquery) is never freed, and
+    release returns False. Freeing it would keep the cache registered
+    over truncated lineage — a NON-RECOMPUTABLE snapshot: local mode
+    never notices, but on a real cluster any later cached-block loss
+    recomputes through the freed checkpoint and hard-fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` in a query that looks nowhere
+    near the release (r8 advisor). Unpersist the cache, then release."""
+    rdd = getattr(pinned, "_ets_checkpoint", None)
+    if rdd is None:
+        raise TypeError(
+            "lifecycle.release frees only a DataFrame returned by "
+            "lifecycle.pin; let the enclosing checkpoint_scope free the rest"
+        )
+    if not rdd.getStorageLevel().isValid():
         return False
-
-    def _probe(obj, method):
-        # a missing method is the is-not-that-leaf-kind signal, a JVM
-        # exception is a real failure and must surface
-        try:
-            return getattr(obj, method)()
-        except Py4JJavaError:
-            raise
-        except Py4JError:
-            return None
-
-    def _iter_leaves(nodes, through_caches):
-        """DFS over plan leaves yielding ``("rdd", rdd)`` for RDD-backed
-        leaves (checkpoint LogicalRDD / RDDScanExec) and ``("cache",
-        cacheBuilder)`` for cache leaves (logical InMemoryRelation
-        exposes cacheBuilder() directly, physical InMemoryTableScanExec
-        via relation()). AQE wrapper LEAF nodes (AdaptiveSparkPlanExec
-        exposes inputPlan/executedPlan, QueryStageExec exposes plan)
-        are always traversed — inputPlan reaches the pre-AQE tree whose
-        leaves are the actual scans, executedPlan/plan cover
-        already-materialized stages; visiting an RDD twice is harmless.
-        Cache leaves are traversed only when ``through_caches``."""
-        work = list(nodes)
-        while work:
-            leaf = work.pop()
-            rdd = _probe(leaf, "rdd")
-            if rdd is not None:
-                yield ("rdd", rdd)
-                continue
-            cb = _probe(leaf, "cacheBuilder")
-            if cb is None:
-                rel = _probe(leaf, "relation")
-                cb = _probe(rel, "cacheBuilder") if rel is not None else None
-            if cb is not None:
-                yield ("cache", cb)
-                if through_caches:
-                    inner = _probe(cb, "cachedPlan")
-                    if inner is not None:
-                        il = inner.collectLeaves()
-                        work.extend(il.apply(i) for i in range(il.size()))
-                continue
-            for m in ("inputPlan", "executedPlan", "plan"):
-                inner = _probe(leaf, m)
-                if inner is not None:
-                    il = inner.collectLeaves()
-                    work.extend(il.apply(i) for i in range(il.size()))
-
-    top = [leaves.apply(i) for i in range(leaves.size())]
-
-    # one walk serves both passes below: under caches=True the owned-
-    # cache collection would use the identical (through_caches=True)
-    # traversal, so materialize it instead of walking the plan twice
-    items = list(_iter_leaves(top, through_caches=caches))
-
-    # caches=True means the caller owns exactly the caches under the
-    # released plan (nested ones included — teardown recurses through
-    # them); everything else in the registry keeps its protection
-    owned_cbs = [o for kind, o in items if kind == "cache"] if caches else []
-    protected = _protected_rdd_ids(df.sparkSession, owned_cbs, _iter_leaves)
-
-    released = False
-    for kind, obj in items:
-        if kind == "rdd":
-            if obj.id() in protected:
-                # some live cache OUTSIDE the released plan (a sibling
-                # result sharing this checkpoint, a caller cache over a
-                # different derivation) still depends on this RDD —
-                # barrier, exactly as if the cache sat in this plan
-                # (r9 review finding: the plan-local walk alone misses
-                # the clean_corpus (cleaned, audit) shape)
-                continue
-            if obj.getStorageLevel().isValid():
-                obj.unpersist(False)
-                released = True
-        else:
-            # cache leaf in the released plan. caches=False: barrier —
-            # through_caches was False so nothing beneath was yielded;
-            # unpersist the cache first or pass caches=True to free the
-            # checkpoint underneath. caches=True: teardown — drop any
-            # materialized buffers (a pending cache holds nothing).
-            if caches and obj.isCachedColumnBuffersLoaded():
-                obj.clearCache(False)
-                released = True
-    return released
+    if rdd.id() in _protected_rdd_ids(pinned.sparkSession):
+        return False
+    rdd.unpersist(False)
+    return True
 
 
-def _protected_rdd_ids(spark, owned_cbs, iter_leaves) -> frozenset:
-    """RDD ids that some REGISTERED cache outside ``owned_cbs`` can
-    still need for re-materialization: the union of RDD-backed leaves
-    under every CacheManager entry's cached physical plan (subquery
-    plans included — a scalar-subquery over a checkpoint is a read
-    path like any other), recursing through nested caches
-    (conservative: a non-owned outer cache protects everything beneath
-    it, even under an owned inner one).
+def _protected_rdd_ids(spark) -> frozenset:
+    """RDD ids that some REGISTERED cache can still need for
+    re-materialization: the RDD-backed leaves of every CacheManager
+    entry's logical plan, subquery plans included (a scalar-subquery
+    over a checkpoint is a read path like any other).
 
     The registry (``CacheManager.cachedData``) is private — read via
     Java reflection, the only way py4j can enumerate live cache entries
     (the public surface only answers per-plan lookups). ONLY the
     reflection access degrades (field moved/sealed on a future Spark →
-    plan-local barrier + warning); a JVM failure while walking the
-    entries is a real failure and propagates, like every other walk in
-    this module — silently degrading there would drop the barrier in
-    exactly the unstable-cluster conditions it protects against.
+    no barrier + warning); a JVM failure while walking the entries is a
+    real failure and propagates — silently degrading there would drop
+    the barrier in exactly the unstable-cluster conditions it protects
+    against.
 
     Cost: O(registry entries × their plan leaves) py4j calls per
     release in sessions that hold caches; gated to zero by
     ``isEmpty()`` otherwise. Deliberately NOT memoized — the registry
-    mutates with every cache()/unpersist(), and a stale snapshot here
-    recreates the staleness bug the fresh-QueryExecution walk fixed.
-    Iterative releases (connected_components) pay it per iteration,
-    but each iteration also runs full Spark jobs, so the walk is noise
-    unless the session holds hundreds of cached plans."""
+    mutates with every cache()/unpersist()."""
     from py4j.protocol import Py4JError, Py4JJavaError, Py4JNetworkError
 
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -283,9 +132,9 @@ def _protected_rdd_ids(spark, owned_cbs, iter_leaves) -> frozenset:
 
         warnings.warn(
             "elephant_twin_spark.lifecycle: CacheManager registry "
-            "unreadable; release() falls back to the plan-local cache "
-            "barrier (caches on sibling plans will not protect shared "
-            "checkpoints)",
+            "unreadable; release() frees checkpoints without the cache "
+            "barrier (a registered cache over a freed checkpoint cannot "
+            "recompute)",
             RuntimeWarning,
             stacklevel=4,
         )
@@ -297,9 +146,8 @@ def _protected_rdd_ids(spark, owned_cbs, iter_leaves) -> frozenset:
         entries = fld.get(cm)
     except Py4JNetworkError:
         # dead JVM / py4j connection is never a shape signal — propagate
-        # (r10 second-pass review: Py4JNetworkError subclasses Py4JError
-        # but not Py4JJavaError, so the shape guards would silently
-        # swallow it into plan-local degrade)
+        # (Py4JNetworkError subclasses Py4JError but not Py4JJavaError,
+        # so the shape guard below would silently swallow it)
         raise
     except Py4JError:
         # reflection unavailable (field moved/sealed — Java-side
@@ -309,12 +157,10 @@ def _protected_rdd_ids(spark, owned_cbs, iter_leaves) -> frozenset:
     # the iteration shape (IndexedSeq.size/apply) is as reflection-
     # fragile as the field itself: on a Spark where cachedData is a
     # different collection (the older java.util.LinkedList shape),
-    # apply() raises the plain "method does not exist" Py4JError and —
-    # without this guard — every release() in a cache-holding session
-    # would hard-fail instead of degrading (r10 advice). A genuine JVM
-    # failure MID-ITERATION is Py4JJavaError and propagates, per the
-    # contract above; the per-entry plan walk below stays outside any
-    # guard for the same reason.
+    # apply() raises the plain "method does not exist" Py4JError —
+    # degrade instead of hard-failing every release() in a
+    # cache-holding session (r10 advice). A genuine JVM failure
+    # MID-ITERATION is Py4JJavaError and propagates.
     try:
         jentries = [entries.apply(i) for i in range(entries.size())]
     except (Py4JJavaError, Py4JNetworkError):
@@ -323,21 +169,17 @@ def _protected_rdd_ids(spark, owned_cbs, iter_leaves) -> frozenset:
         return _degrade()
     ids = set()
     for entry in jentries:
-        cb = entry.cachedRepresentation().cacheBuilder()
-        if any(cb.equals(o) for o in owned_cbs):
-            continue
-        # walk the entry's LOGICAL plan, not cacheBuilder.cachedPlan():
-        # the stored logical plan is pre-substitution (true leaves, no
-        # nested InMemoryRelation to recurse through) and — unlike the
-        # physical plan, where AQE wraps everything in a leaf whose
-        # subqueries are planned lazily — its subqueriesAll actually
-        # surfaces scalar/IN/EXISTS subquery trees, the one path to a
-        # checkpoint that collectLeaves alone never enters (r9
-        # second-pass review finding).
-        nodes = _leaves_with_subqueries(entry.plan())
-        for kind, obj in iter_leaves(nodes, through_caches=True):
-            if kind == "rdd":
-                ids.add(obj.id())
+        # the entry's LOGICAL plan is pre-cache-substitution (true
+        # leaves, no nested InMemoryRelation), and its subqueriesAll
+        # surfaces scalar/IN/EXISTS subquery trees — the one path to a
+        # checkpoint that collectLeaves alone never enters
+        for leaf in _leaves_with_subqueries(entry.plan()):
+            try:
+                ids.add(leaf.rdd().id())
+            except Py4JJavaError:
+                raise
+            except Py4JError:  # not an RDD-backed leaf
+                pass
     return frozenset(ids)
 
 
@@ -364,13 +206,12 @@ def _leaves_with_subqueries(plan) -> list:
 
 @contextmanager
 def checkpoint_scope() -> Iterator[List[DataFrame]]:
-    """Scope within which every :func:`pin` is tracked; on exit all
-    tracked checkpoints are released. Wrap one query's build-execute-
-    consume span::
+    """Owner of every :func:`pin` made inside it; on exit each is
+    released. Wrap one query's build-execute-consume span::
 
         with lifecycle.checkpoint_scope():
-            n = dedup.minhash_near_dup_pairs(docs, "text", "doc_id").count()
-        # candidate/shingle checkpoint blocks are freed here
+            n = dedup.near_dup_clusters(docs, "text", "doc_id").count()
+        # every checkpoint behind that result is freed here
 
     Scopes nest; each releases only its own pins.
 

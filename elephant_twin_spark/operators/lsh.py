@@ -313,11 +313,9 @@ class LshIndex:
         on the pushdown path, where an action runs anyway —
         ``pushdown_limit=0`` keeps the method fully lazy as before.
 
-        Lifecycle contract (r16 advisor): on the pushdown path the
-        returned DataFrame is checkpoint-backed — consume it within the
-        enclosing :func:`.lifecycle.checkpoint_scope`; holding it past
-        the scope's exit raises rather than recomputing
-        (``pushdown_limit=0`` restores the fully-lazy contract)."""
+        Lifecycle: on the pushdown path the result is checkpoint-backed
+        — consume it inside your ``checkpoint_scope`` (see
+        :mod:`.lifecycle`)."""
         probe = self._probe_bands(
             docs, text_col, id_col, probe_sigs=probe_sigs
         ).withColumnsRenamed({"id": "probe_id"})
@@ -369,10 +367,8 @@ class LshIndex:
         consumer. The pin is probe-bounded (|probe| × bucket
         collisions); at 100 TB it is the difference between scanning
         the pruned bucket table once or twice per gate call. Same
-        rows out; consume-within-scope lifecycle as
-        :func:`.dedup.jaccard_verify_pairs` (A/B on the bench key:
-        steady gate JVM CPU 11.4-12.2 → 8.6-8.9 s/rep, same plan
-        otherwise).
+        rows out (A/B on the bench key: steady gate JVM CPU 11.4-12.2 →
+        8.6-8.9 s/rep, same plan otherwise).
 
         ``id_pushdown_limit``: cap on the candidate-row collect (rows
         bound distinct ids from above, and a row take() over the pinned
@@ -384,11 +380,8 @@ class LshIndex:
         ``0`` disables the collect outright. Results are identical on
         every path.
 
-        Lifecycle contract (r16 advisor): because of the pins, the
-        returned DataFrame is checkpoint-backed — consume it within the
-        enclosing :func:`.lifecycle.checkpoint_scope` (as every caller
-        in this engine does), or call under your own scope; holding the
-        result past the scope's exit raises rather than recomputing."""
+        Lifecycle: the result is checkpoint-backed — consume it inside
+        your ``checkpoint_scope`` (see :mod:`.lifecycle`)."""
         cands = lifecycle.pin(
             self.candidate_pairs(docs, text_col, id_col, probe_sigs=probe_sigs)
         )
@@ -445,9 +438,7 @@ class LshIndex:
             cands.join(probe_sh, "probe_id")
             .join(corpus_sh, "corpus_id")
             .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
+                "jaccard", dedup.shingle_jaccard(F.col("sh_a"), F.col("sh_b"))
             )
             .where(F.col("jaccard") >= threshold)
             .groupBy("probe_id")

@@ -43,16 +43,8 @@ def clean_corpus(
     kept rows. ``cleaned`` is the input restricted to kept ids. Survivor
     choice in both dedup stages is deterministic (min id).
 
-    Memory lifecycle: both results are backed by checkpoints (the gate
-    relation here, the component labels inside ``near_dup_clusters``)
-    that are escaped from ambient scopes so the results survive them.
-    In a long-lived session, free those blocks once BOTH results are
-    consumed with ``lifecycle.release(audit)`` — release walks the
-    derived plan and frees every checkpoint leaf under it (the gate
-    checkpoint is shared by ``cleaned``, so neither result is usable
-    after). If you ``cache()`` a result, the registered cache is a
-    release BARRIER (cluster-safety — see ``lifecycle.release``):
-    unpersist it first, or tear down with ``release(..., caches=True)``.
+    Lifecycle: both results are checkpoint-backed — consume them
+    inside your ``checkpoint_scope`` (see :mod:`.lifecycle`).
     """
     feats = textstats.repetition_ratio(
         textstats.lang_id(dedup._fan_out(df), text_col), text_col, out_col="_rep"
@@ -62,12 +54,6 @@ def clean_corpus(
         F.col("lang_pred").alias("_lang"),
         F.col("_rep"),
     )
-    # escape=True: this checkpoint backs BOTH returned DataFrames
-    # (cleaned and audit), so it must survive any ambient caller
-    # checkpoint_scope — releasing it there would make consuming the
-    # results hard-fail instead of recompute (r6 advisor finding).
-    # Callers free it afterwards via lifecycle.release(audit) — release
-    # walks the derived plan to this checkpoint (r7 verdict #1).
     gated = lifecycle.pin(feats.withColumn(
         "_reason",
         F.when(
@@ -75,7 +61,7 @@ def clean_corpus(
         )
         .when(~F.col("_lang").isin(list(allowed_langs)), F.lit("lang"))
         .when(F.col("_rep") > max_repetition, F.lit("repetitive")),
-    ), escape=True)
+    ))
     # ^ the gate expressions (stopword language ID + n-gram repetition)
     # are the most expensive per-row work in the pipeline, and every
     # downstream branch (sig groups, minhash signatures, jaccard verify,

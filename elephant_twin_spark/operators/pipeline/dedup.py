@@ -139,6 +139,19 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return let(whitespace_tokenizer(text), body)
 
 
+def shingle_jaccard(a: Column, b: Column) -> Column:
+    """Jaccard similarity of two :func:`word_shingles` arrays. Both are
+    duplicate-free, so ``|A ∪ B| = |A| + |B| - |A ∩ B|``: one set
+    operation, its size bound once with ``let``. Same integers as
+    ``size(array_intersect) / size(array_union)``, so the same double."""
+    from elephant_twin_spark.functions.binding import let
+
+    return let(
+        F.size(F.array_intersect(a, b)),
+        lambda k: k / (F.size(a) + F.size(b) - k),
+    )
+
+
 # ----------------------------------------------------------------- minhash
 
 def minhash_signatures(
@@ -364,11 +377,7 @@ def jaccard_verify_pairs(
     j = (
         candidates.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+        .withColumn("jaccard", shingle_jaccard(F.col("sh_a"), F.col("sh_b")))
     )
     return j.where(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
@@ -644,15 +653,9 @@ def connected_components(
     reached, so ``max_iter`` must cover that round too: a graph whose
     labels settle exactly in round ``max_iter`` also raises.
 
-    Memory lifecycle: the returned labels are backed by the final
-    iteration's checkpoint (escaped from ambient scopes so the result
-    survives them). In a long-lived session, free its blocks with
-    ``lifecycle.release(result)`` once consumed — release walks the
-    derived plan to the checkpoint leaf; the result is unusable after.
-    If you ``cache()`` the result, the registered cache is a release
-    BARRIER (freeing the checkpoint under a live cache would leave a
-    non-recomputable snapshot on a real cluster) — unpersist the cache
-    first, or tear both down with ``release(result, caches=True)``.
+    Lifecycle: the result is backed by the final round's checkpoint —
+    consume it inside your ``checkpoint_scope`` (see
+    :mod:`.lifecycle`).
     """
     edges = (
         pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
@@ -687,13 +690,12 @@ def connected_components(
     def label_sum(l: DataFrame):
         return l.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
 
-    # the loop's escaped checkpoints are released manually; if an
-    # iteration fails mid-flight (convergence probe, executor loss) no
-    # ambient scope will reclaim them, so free the live ones on the way
-    # out of the error path (round-7 advisor finding). The INITIAL
-    # label-sum probe sits inside the guard too: it is the first action
-    # over the freshly pinned labels/edges, so a failure there would
-    # otherwise leak both checkpoints (r8 review finding)
+    # superseded rounds are released as soon as their successor is
+    # checked, and the live ones on the way out of the error path
+    # (round-7 advisor finding): with no enclosing scope nothing else
+    # would free them. The INITIAL label-sum probe sits inside the
+    # guard too: it is the first action over the freshly pinned
+    # labels/edges (r8 review finding)
     try:
         prev_sum = label_sum(labels) if numeric else None
         for it in range(max_iter):
@@ -701,13 +703,10 @@ def connected_components(
                 edges.join(labels, edges.d == labels.node)
                 .select(F.col("s").alias("node"), "comp")
             )
-            # escape=True: the final iteration's checkpoint backs the
-            # RETURNED labels, which must outlive any ambient caller
-            # scope; superseded iterations are released explicitly
-            # below, so the loop still keeps exactly two iterations
-            # live. The caller frees the returned labels with
-            # lifecycle.release(result) when done — release walks the
-            # derived plan down to this checkpoint.
+            # the final round's checkpoint backs the RETURNED labels
+            # (owned by the caller's scope); superseded rounds are
+            # released explicitly below, so the loop keeps exactly two
+            # rounds live.
             # eager=False: the checkpoint materializes inside the
             # guarded convergence probe below, so a task failure DURING
             # materialization (the iteration's likeliest failure point)
@@ -730,7 +729,7 @@ def connected_components(
                     "node",
                     F.least(F.col("comp"), F.coalesce("_hc", "comp")).alias("comp"),
                 )
-            new = lifecycle.pin(half, eager=False, escape=True)
+            new = lifecycle.pin(half, eager=False)
             try:
                 if numeric:
                     new_sum = label_sum(new)

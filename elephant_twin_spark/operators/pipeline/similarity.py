@@ -889,56 +889,62 @@ def ann_recall_audit(
 
     Shape: the per-query collects are bounded by ``k`` rows; cluster
     assignment, PQ codes and LSH buckets are computed once and pinned
-    (``localCheckpoint``). At production scale run the audit over a
+    (``localCheckpoint``) under the audit's own scope, freed before it
+    returns. At production scale run the audit over a
     SAMPLE of queries against pre-materialized assigned/encoded tables
     — recall estimates converge with tens of queries, so the audit
     cost is query-proportional, never corpus-proportional."""
     spark = df.sparkSession
     planes = md5_sign_planes(len(centroids[0]), bits, seed)
-    assigned = lifecycle.pin(ivf_assign(df, vec_col, centroids))
-    codes = lifecycle.pin(pq_encode(df, vec_col, id_col, codebooks))
-    bucketed = lifecycle.pin(with_lsh_bucket(df, vec_col, planes))
-    qrows = (
-        df.where(F.col(id_col).isin(list(query_ids)))
-        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id")
-        .collect()
-    )
-    if not qrows:
-        raise ValueError(
-            f"no query vectors found: none of {list(query_ids)!r} match "
-            f"{id_col!r} in the input"
+    # the result is built on the driver from collected counts, so no
+    # pin outlives this call: its own scope frees all three
+    with lifecycle.checkpoint_scope():
+        assigned = lifecycle.pin(ivf_assign(df, vec_col, centroids))
+        codes = lifecycle.pin(pq_encode(df, vec_col, id_col, codebooks))
+        bucketed = lifecycle.pin(with_lsh_bucket(df, vec_col, planes))
+        qrows = (
+            df.where(F.col(id_col).isin(list(query_ids)))
+            .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+            .orderBy("id")
+            .collect()
         )
-    per_method: dict = {m: [] for m in ("lsh", "ivf", "pq", "ivf_pq")}
-    for r in qrows:
-        qv = [float(x) for x in r["v"]]
-        truth = {row["id"] for row in cosine_topk(df, vec_col, id_col, qv, k).collect()}
-        q_bucket = 0
-        for i, p in enumerate(planes):
-            if sum(a * b for a, b in zip(qv, p)) >= 0:
-                q_bucket |= 1 << i
-        probe = [
-            b for b in range(1 << bits)
-            if bin(b ^ q_bucket).count("1") <= multiprobe_hamming
-        ]
-        results = {
-            "lsh": cosine_topk(
-                bucketed.where(F.col("bucket").isin(probe)), vec_col, id_col, qv, k
-            ),
-            "ivf": ivf_topk(
-                assigned, vec_col, id_col, qv, centroids, k=k, nprobe=nprobe_ivf
-            ),
-            "pq": pq_search(
-                df, codes, vec_col, id_col, qv, codebooks, k=k, shortlist=shortlist
-            ),
-            "ivf_pq": ivf_pq_search(
-                assigned, vec_col, id_col, qv, centroids, codebooks,
-                codes_df=codes, k=k, nprobe=nprobe_ivfpq, shortlist=shortlist,
-            ),
-        }
-        for m, res in results.items():
-            ids = {row["id"] for row in res.collect()}
-            per_method[m].append(len(ids & truth))
+        if not qrows:
+            raise ValueError(
+                f"no query vectors found: none of {list(query_ids)!r} match "
+                f"{id_col!r} in the input"
+            )
+        per_method: dict = {m: [] for m in ("lsh", "ivf", "pq", "ivf_pq")}
+        for r in qrows:
+            qv = [float(x) for x in r["v"]]
+            truth = {
+                row["id"] for row in cosine_topk(df, vec_col, id_col, qv, k).collect()
+            }
+            q_bucket = 0
+            for i, p in enumerate(planes):
+                if sum(a * b for a, b in zip(qv, p)) >= 0:
+                    q_bucket |= 1 << i
+            probe = [
+                b for b in range(1 << bits)
+                if bin(b ^ q_bucket).count("1") <= multiprobe_hamming
+            ]
+            results = {
+                "lsh": cosine_topk(
+                    bucketed.where(F.col("bucket").isin(probe)), vec_col, id_col, qv, k
+                ),
+                "ivf": ivf_topk(
+                    assigned, vec_col, id_col, qv, centroids, k=k, nprobe=nprobe_ivf
+                ),
+                "pq": pq_search(
+                    df, codes, vec_col, id_col, qv, codebooks, k=k, shortlist=shortlist
+                ),
+                "ivf_pq": ivf_pq_search(
+                    assigned, vec_col, id_col, qv, centroids, codebooks,
+                    codes_df=codes, k=k, nprobe=nprobe_ivfpq, shortlist=shortlist,
+                ),
+            }
+            for m, res in results.items():
+                ids = {row["id"] for row in res.collect()}
+                per_method[m].append(len(ids & truth))
     n = len(qrows)
     rows = [
         (m, n, int(sum(hs)), int(min(hs)), round(sum(hs) / (k * n), 4))

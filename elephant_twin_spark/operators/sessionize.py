@@ -110,8 +110,8 @@ def funnel(
     ``prefilter=True`` passes 2..n instead run over ONE
     ``lifecycle.pin``'d frame of the later-stage rows
     (``y IN stages[1:] AND user IS NOT NULL``); the pin is a local
-    checkpoint behind the returned plan (consume inside a
-    ``lifecycle.checkpoint_scope`` or ``release`` it).
+    checkpoint behind the returned plan (consume it inside your
+    ``checkpoint_scope`` — see :mod:`.lifecycle`).
 
     The default is the MEASURED winner, not the assumed one
     (SCALE_EXPERIMENTS.md, "r11: funnel scan-shape A/B": 3M-row 10x

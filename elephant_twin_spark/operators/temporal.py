@@ -340,9 +340,9 @@ def scd2_merge(
     the probe's driver-blocking aggregate and the replay share ONE
     materialization instead of each re-running the history scan + semi
     join (the probe previously re-read the slice as its own pass —
-    measured ~1.5x merge wall at sf0.1; SCALE_EXPERIMENTS r8). The
-    validated merge's result is therefore checkpoint-backed: consume it
-    within the enclosing ``lifecycle.checkpoint_scope``.
+    measured ~1.5x merge wall at sf0.1; SCALE_EXPERIMENTS r8).
+    Lifecycle: the validated merge's result is checkpoint-backed —
+    consume it inside your ``checkpoint_scope`` (see :mod:`.lifecycle`).
     ``validate=False`` skips the probe and keeps the merge fully lazy
     on feeds whose watermark is enforced upstream. A history
     without ``last_ts`` cannot express the precondition and is
@@ -377,11 +377,8 @@ def scd2_merge(
         # scan + semi join — with the pin the slice (batch-proportional
         # by the merge's own contract) materializes once and both read
         # it, one fewer full history pass per validated merge. The
-        # probe already makes this path driver-blocking at call time;
-        # the pin additionally makes the RESULT checkpoint-backed —
-        # consume it within the enclosing lifecycle.checkpoint_scope
-        # (as every caller here does). validate=False keeps the merge
-        # fully lazy as before.
+        # probe already makes this path driver-blocking at call time.
+        # validate=False keeps the merge fully lazy as before.
         touched = lifecycle.pin(touched, eager=False)
         # one batch-proportional probe: per affected key, the earliest
         # batch event must be strictly newer than every raw event the

@@ -153,12 +153,10 @@ def jsonl_audit(
     memory pressure, and RECOMPUTABLE — consuming ``good``/``bad``
     after any enclosing ``checkpoint_scope`` exits re-reads instead of
     hard-failing, and at 100 TB the block manager never holds an
-    unevictable corpus copy. Free the buffers early with
-    ``lifecycle.release(good, caches=True)`` (recompute-on-next-use,
-    never an error); when a long-lived session is done with this source
-    entirely, :func:`dispose` unregisters the cache entry too (each
-    audited path otherwise keeps one CacheManager registration for the
-    session's lifetime)."""
+    unevictable corpus copy. When a long-lived session is done with
+    this source, :func:`dispose` drops the buffers and unregisters the
+    cache entry (each audited path otherwise keeps one CacheManager
+    registration for the session's lifetime)."""
     full_schema = schema + ", _corrupt string"
     df = (
         spark.read.schema(full_schema)
@@ -184,9 +182,8 @@ def jsonl_audit(
 def dispose(audit_result: DataFrame) -> bool:
     """Fully retire the cached parse relation behind a
     :func:`jsonl_audit` result: drops the buffers AND the CacheManager
-    registration (``lifecycle.release(..., caches=True)`` only drops
-    buffers — the entry would otherwise accumulate per audited path in
-    a long-lived session). Pass either returned DataFrame. Call it when
+    registration (the entry would otherwise accumulate per audited path
+    in a long-lived session). Pass either returned DataFrame. Call it when
     DONE with this source: without the registration the
     ``QUERY_ONLY_CORRUPT_RECORD_COLUMN`` guard re-applies, so
     corrupt-only-projection shapes (``good.count()``, ``bad``) raise

@@ -61,6 +61,13 @@ def wait_storage(spark, pred, timeout_s=5.0):
     return lifecycle.storage_snapshot(spark)
 
 
+def is_live(pinned) -> bool:
+    """Whether the checkpoint behind a ``lifecycle.pin`` handle still
+    holds its storage (release sets it to NONE on the driver at once;
+    the block-manager count follows asynchronously)."""
+    return pinned._ets_checkpoint.getStorageLevel().isValid()
+
+
 def settled_rdd_count(spark, timeout_s=5.0) -> int:
     """Block-manager RDD count once it stops changing (two identical
     consecutive snapshots). Tests that capture a BASELINE before

@@ -266,3 +266,25 @@ def test_top_fraction_approx_keeps_null_group(spark):
     assert exact_null == 5
     # approx keeps >= the exact count at this tiny accuracy-exact scale
     assert approx_null >= 5
+
+
+def test_shingle_jaccard_equals_intersect_over_union(spark):
+    """shingle_jaccard (one set operation, |A∪B| = |A|+|B|-k) returns
+    the same double as size(array_intersect)/size(array_union) for every
+    pair over texts that are null, empty, shorter than shingle_k, or
+    repeat shingles."""
+    from elephant_twin_spark.operators.pipeline import dedup
+
+    texts = [None, "", "a", "a b", "a b c", "a b c d", "a b c a b c", "x y z w", "  "]
+    df = spark.createDataFrame(
+        [(a, b) for a in texts for b in texts], "a string, b string"
+    ).select(
+        dedup.word_shingles(F.col("a"), 3).alias("sa"),
+        dedup.word_shingles(F.col("b"), 3).alias("sb"),
+    )
+    old = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
+    new = dedup.shingle_jaccard(F.col("sa"), F.col("sb"))
+    rows = df.select(old.alias("old"), new.alias("new")).collect()
+    assert len(rows) == len(texts) ** 2
+    assert all(r["old"] == r["new"] or (r["old"] is None and r["new"] is None) for r in rows)
+    assert any(r["new"] is None for r in rows) and any(0 < r["new"] < 1 for r in rows if r["new"] is not None)

@@ -296,28 +296,15 @@ def test_cache_registry_reflection_succeeds_on_this_spark(spark):
     IndexedSeq of CachedData), _protected_rdd_ids must enumerate a real
     live cache and surface the RDD-backed leaf beneath it WITHOUT the
     degrade warning. A future Spark bump that moves/reshapes the field
-    must fail this test loudly instead of silently downgrading the
-    global barrier to plan-local in production."""
-    from py4j.protocol import Py4JError, Py4JJavaError
-
-    def iter_leaves(nodes, through_caches):
-        # minimal RDD-leaf walk, mirroring release()'s probe discipline
-        for leaf in nodes:
-            try:
-                rdd = leaf.rdd()
-            except Py4JJavaError:
-                raise
-            except Py4JError:
-                continue
-            yield ("rdd", rdd)
-
+    must fail this test loudly instead of silently dropping the cache
+    barrier in production."""
     base = spark.range(0, 1000).localCheckpoint()
     cached = base.groupBy((F.col("id") % 5).alias("k")).count().cache()
     cached.count()
     try:
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
-            ids = lifecycle._protected_rdd_ids(spark, [], iter_leaves)
+            ids = lifecycle._protected_rdd_ids(spark)
         assert not [
             w for w in caught if "CacheManager registry" in str(w.message)
         ], "reflection degraded on the running Spark"
@@ -331,7 +318,7 @@ def test_cache_registry_reflection_succeeds_on_this_spark(spark):
 def test_cache_registry_iteration_shape_degrades_with_warning():
     """On a Spark where cachedData is not an IndexedSeq (older
     java LinkedList shape), entries.apply() raises Py4JError — that must
-    degrade to the plan-local barrier with the warning, not hard-fail
+    degrade to an empty protected set with the warning, not hard-fail
     every release() in a cache-holding session (r10 advice)."""
     from py4j.protocol import Py4JError
 
@@ -372,11 +359,8 @@ def test_cache_registry_iteration_shape_degrades_with_warning():
     class FakeSpark:
         _jsparkSession = FakeJSession()
 
-    def iter_leaves(nodes, through_caches):  # must never be reached
-        raise AssertionError("plan walk ran despite shape failure")
-
     with pytest.warns(RuntimeWarning, match="CacheManager registry"):
-        ids = lifecycle._protected_rdd_ids(FakeSpark(), [], iter_leaves)
+        ids = lifecycle._protected_rdd_ids(FakeSpark())
     assert ids == frozenset()
 
 
@@ -544,7 +528,7 @@ def test_cache_registry_jvm_failure_mid_iteration_propagates():
         _jsparkSession = FakeJSession()
 
     with pytest.raises(Py4JJavaError):
-        lifecycle._protected_rdd_ids(FakeSpark(), [], lambda n, through_caches: iter(()))
+        lifecycle._protected_rdd_ids(FakeSpark())
 
 
 def test_bloom_sketch_reader_publish_window(spark, workdir, events_multifile):

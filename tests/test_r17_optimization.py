@@ -109,9 +109,8 @@ def test_cc_chain_beyond_max_iter_now_exact(spark):
     pairs = spark.range(120).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = dedup.connected_components(pairs, max_iter=50)
-    rows = out.collect()
-    lifecycle.release(out)
+    with lifecycle.checkpoint_scope():
+        rows = dedup.connected_components(pairs, max_iter=50).collect()
     assert len(rows) == 121
     assert {r["component"] for r in rows} == {0}
 
@@ -138,15 +137,10 @@ def test_cc_doubling_identical_to_plain_on_converging_graph(spark):
     the escalated form returns bit-identical rows."""
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 20), (30, 11), (40, 41), (41, 42)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    plain = dedup.connected_components(pairs, hop_after=10**6)
-    a = sorted(map(tuple, plain.collect()))
-    lifecycle.release(plain)
-    hopped = dedup.connected_components(pairs, hop_after=0)
-    b = sorted(map(tuple, hopped.collect()))
-    lifecycle.release(hopped)
-    default = dedup.connected_components(pairs)
-    c = sorted(map(tuple, default.collect()))
-    lifecycle.release(default)
+    with lifecycle.checkpoint_scope():
+        a = sorted(map(tuple, dedup.connected_components(pairs, hop_after=10**6).collect()))
+        b = sorted(map(tuple, dedup.connected_components(pairs, hop_after=0).collect()))
+        c = sorted(map(tuple, dedup.connected_components(pairs).collect()))
     assert a == b == c
     assert a == [
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (30, 10), (40, 40), (41, 40), (42, 40),
@@ -159,9 +153,8 @@ def test_cc_string_ids_with_hop(spark):
     pairs = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(20)], "id_a string, id_b string"
     )
-    out = dedup.connected_components(pairs, hop_after=2)
-    rows = out.collect()
-    lifecycle.release(out)
+    with lifecycle.checkpoint_scope():
+        rows = dedup.connected_components(pairs, hop_after=2).collect()
     assert len(rows) == 21 and {r["component"] for r in rows} == {"n000"}
 
 

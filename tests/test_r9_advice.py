@@ -1,10 +1,9 @@
 """Round-9 closure tests for the four r8 advisor findings.
 
-1. ``release(caches=False)`` must treat a MATERIALIZED caller cache as
-   a barrier (cluster-safety: freeing a checkpoint under a registered
-   cache leaves a non-recomputable snapshot) — the barrier tests live
-   with their r8 siblings in test_r8_lifecycle.py; here we pin the
-   ``caches=True`` full-teardown consequence.
+1. A registered cache is a barrier to freeing the checkpoint beneath
+   it (cluster-safety: freeing it leaves a non-recomputable snapshot)
+   — here the late-registered, sibling and subquery shapes; the
+   materialized and pending shapes live in test_r8_lifecycle.py.
 2. ``build_text_index`` must get the same lost-checkpoint-block
    classify-and-retry as ``build.write_range_partitioned``.
 3. ``build_text_index``'s release must not mask an in-flight write
@@ -18,10 +17,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import is_live
 from elephant_twin_spark.operators import lifecycle
-
-
-from conftest import settled_rdd_count, wait_storage as _wait_storage  # noqa: E402
 
 
 def _final_cleanup(fn):
@@ -39,85 +36,45 @@ def _final_cleanup(fn):
         return None
 
 
-# --------------------------------------------- 1. caches=True teardown
-
-def test_release_caches_true_is_full_teardown_over_materialized_cache(spark):
-    """caches=True over a materialized cache frees the buffers AND the
-    checkpoint beneath — after which the still-registered cache cannot
-    materialize again. Teardown means no further reads; the safe
-    keep-using-the-cache path is the caches=False barrier.
-
-    The cached plan here is deliberately NARROW (no shuffle between the
-    cache and the checkpoint): with a shuffle in between, local mode
-    can re-materialize the cache from still-present shuffle files
-    without ever touching the freed checkpoint — exactly the
-    local-masks-the-cluster-failure effect the r8 advisor flagged for
-    the caches=False case."""
-    base = settled_rdd_count(spark)
-    ck = lifecycle.pin(
-        spark.range(20_000).selectExpr("id", "id * 7 as v"), escape=True
-    )
-    derived = ck.selectExpr("id", "v * 2 as w").cache()
-    try:
-        assert derived.count() == 20_000
-        assert lifecycle.release(derived, caches=True) is True
-        snap = _wait_storage(spark, lambda s: s["n_rdds"] <= base)
-        assert snap["n_rdds"] <= base, snap
-        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
-            derived.count()
-    finally:
-        _final_cleanup(lambda: derived.unpersist(True))
-
+# --------------------------------------------- 1. cache barrier shapes
 
 def test_release_sees_cache_registered_after_first_action(spark):
-    """release() must evaluate cache substitution against the CURRENT
-    cache registry, not the one memoized at the DataFrame's first
-    action (r9 fix found while closing the barrier item): Dataset
-    memoizes queryExecution, so a cache registered AFTER an action on
-    the same handle would be invisible to a walk over the stale plan —
-    release would free the checkpoint out from under the registered
-    cache, the exact snapshot hazard the barrier exists to prevent."""
-    ck = lifecycle.pin(
-        spark.range(10_000).selectExpr("id", "id * 13 as v"), escape=True
-    )
-    derived = ck.selectExpr("id", "v + 1 as w")
-    assert derived.count() == 10_000  # memoizes a cache-free plan
-    derived.cache()
-    try:
+    """Scope exit must evaluate the barrier against the CURRENT cache
+    registry (r9 fix found while closing the barrier item): a cache
+    registered AFTER an action on the derived handle still protects
+    the checkpoint beneath it."""
+    with lifecycle.checkpoint_scope():
+        ck = lifecycle.pin(spark.range(10_000).selectExpr("id", "id * 13 as v"))
+        derived = ck.selectExpr("id", "v + 1 as w")
+        assert derived.count() == 10_000  # memoizes a cache-free plan
+        derived.cache()
         assert derived.count() == 10_000  # materializes the late cache
-        # the fresh walk sees the barrier; the stale plan would not
-        assert lifecycle.release(derived) is False
+    try:
+        assert is_live(ck)
     finally:
         derived.unpersist(True)
-    assert lifecycle.release(derived) is True
+    assert lifecycle.release(ck) is True
 
 
 def test_release_barrier_covers_sibling_cached_result(spark):
-    """The barrier must be GLOBAL, not plan-local (r9 review finding,
-    verified live before the fix): with two results sharing one escaped
-    checkpoint — the clean_corpus (cleaned, audit) shape — a cache on
-    ONE sibling never appears in the OTHER's plan, so a plan-local walk
-    would free the shared checkpoint out from under the registered
-    cache (the exact non-recomputable-snapshot hazard the barrier
-    exists to prevent)."""
-    ck = lifecycle.pin(
-        spark.range(10_000).selectExpr("id", "id * 3 as v"), escape=True
-    )
-    cleaned = ck.where("v % 2 = 0").cache()
-    audit = ck.selectExpr("id", "v")
+    """The barrier is GLOBAL, not plan-local (r9 review finding): with
+    two results sharing one checkpoint — the clean_corpus (cleaned,
+    audit) shape — a cache on ONE sibling protects the checkpoint the
+    OTHER reads, so both stay usable after the scope exits."""
     released_after = None
     try:
-        assert cleaned.count() == 10_000 // 2
-        # sibling cache protects the shared checkpoint...
-        assert lifecycle.release(audit) is False
-        # ...and caches=True does NOT pierce it either: ownership
-        # extends only to caches under the RELEASED plan
-        assert lifecycle.release(audit, caches=True) is False
+        with lifecycle.checkpoint_scope():
+            ck = lifecycle.pin(spark.range(10_000).selectExpr("id", "id * 3 as v"))
+            cleaned = ck.where("v % 2 = 0").cache()
+            audit = ck.selectExpr("id", "v")
+            assert cleaned.count() == 10_000 // 2
+        # the sibling cache protected the shared checkpoint
+        assert is_live(ck)
         assert cleaned.count() == 10_000 // 2
         assert audit.count() == 10_000
     finally:
         released_after = _final_cleanup(
-            lambda: (cleaned.unpersist(True), lifecycle.release(audit))[1]
+            lambda: (cleaned.unpersist(True), lifecycle.release(ck))[1]
         )
     # sibling cache gone -> the shared checkpoint is freeable
     assert released_after is True
@@ -128,51 +85,57 @@ def test_release_barrier_sees_checkpoint_behind_subquery(spark):
     plan, which collectLeaves never enters (r9 second-pass review
     finding) — the protected-set walk must traverse subqueriesAll so
     the barrier holds for that shape too."""
-    ck = lifecycle.pin(
-        spark.range(1_000).selectExpr("id", "id * 2 as v"), escape=True
-    )
-    ck.createOrReplaceTempView("r9_sq_ck")
-    spark.range(100).selectExpr("id").createOrReplaceTempView("r9_sq_other")
-    cached = spark.sql(
-        "SELECT id FROM r9_sq_other WHERE id < (SELECT max(v) / 100 FROM r9_sq_ck)"
-    ).cache()
-    audit = ck.selectExpr("id")
     released_after = None
     try:
-        assert cached.count() > 0
+        with lifecycle.checkpoint_scope():
+            ck = lifecycle.pin(spark.range(1_000).selectExpr("id", "id * 2 as v"))
+            ck.createOrReplaceTempView("r9_sq_ck")
+            spark.range(100).selectExpr("id").createOrReplaceTempView("r9_sq_other")
+            cached = spark.sql(
+                "SELECT id FROM r9_sq_other WHERE id < (SELECT max(v) / 100 FROM r9_sq_ck)"
+            ).cache()
+            assert cached.count() > 0
         # the only path from the cache to the checkpoint is the subquery
-        assert lifecycle.release(audit) is False
+        assert is_live(ck)
     finally:
         released_after = _final_cleanup(
-            lambda: (cached.unpersist(True), lifecycle.release(audit))[1]
+            lambda: (cached.unpersist(True), lifecycle.release(ck))[1]
         )
     assert released_after is True
 
 
 def test_clean_corpus_sibling_cache_blocks_release(spark, docs_path):
-    """The docstring's promise at operator level: cache one clean_corpus
-    result, release through the other — the shared gate checkpoint must
-    survive until the cache is unpersisted."""
+    """The barrier at operator level: cache one clean_corpus result
+    inside the scope — the shared gate checkpoint must survive the
+    scope's exit until the cache is unpersisted. The scope's yielded
+    list is the ledger of its pins, so the caller can free the
+    survivors afterwards."""
     from elephant_twin_spark.operators.pipeline import clean
 
     docs = spark.read.parquet(docs_path).limit(200)
-    cleaned, audit = clean.clean_corpus(
-        docs, "text", "doc_id", min_tokens=10, allowed_langs=("en",),
-        num_perm=16, num_bands=4,
-    )
-    cleaned.cache()
     released_after = None
     try:
-        n_clean = cleaned.count()
-        assert 0 < n_clean < 200
-        # the gate checkpoint is shared; the sibling cache bars release
-        assert lifecycle.release(audit) is False
+        with lifecycle.checkpoint_scope() as pins:
+            cleaned, audit = clean.clean_corpus(
+                docs, "text", "doc_id", min_tokens=10, allowed_langs=("en",),
+                num_perm=16, num_bands=4,
+            )
+            cleaned.cache()
+            n_clean = cleaned.count()
+            assert 0 < n_clean < 200
+        # the gate checkpoint is shared; the sibling cache kept it
+        assert any(is_live(p) for p in pins)
         assert cleaned.count() == n_clean  # cache intact and serving
+        assert audit.count() == 200
     finally:
         released_after = _final_cleanup(
-            lambda: (cleaned.unpersist(True), lifecycle.release(audit))[1]
+            lambda: (
+                cleaned.unpersist(True),
+                [lifecycle.release(p) for p in pins],
+            )[1]
         )
-    assert released_after is True
+    assert any(released_after)
+    assert not any(is_live(p) for p in pins)
 
 
 # ------------------------------------- 2. text build block-loss retry
@@ -191,8 +154,8 @@ def test_build_text_index_retries_unpinned_on_block_loss(
     orig_pin = lifecycle.pin
     dropped = []
 
-    def lossy_pin(df, eager=True, escape=False):
-        out = orig_pin(df, eager=eager, escape=escape)
+    def lossy_pin(df, eager=True):
+        out = orig_pin(df, eager=eager)
         out._jdf.queryExecution().analyzed().rdd().unpersist(True)
         dropped.append(True)
         return out
@@ -232,7 +195,7 @@ def test_build_text_index_nonrecoverable_error_not_masked_by_release(
     orig_release = lifecycle.release
     leaked = []
 
-    def noisy_release(df, caches=False):
+    def noisy_release(df):
         leaked.append(df)
         raise RuntimeError("simulated release walk failure")
 
@@ -257,11 +220,11 @@ def test_checkpoint_scope_releases_later_pins_despite_failure(spark, monkeypatch
     orig_release = lifecycle.release
     calls = []
 
-    def flaky_release(df, caches=False):
+    def flaky_release(df):
         calls.append(df)
         if len(calls) == 1:
             raise RuntimeError("simulated release failure")
-        return orig_release(df, caches)
+        return orig_release(df)
 
     monkeypatch.setattr(lifecycle, "release", flaky_release)
     with pytest.raises(lifecycle.ExceptionGroup, match="release failed for 1/2"):
@@ -282,7 +245,7 @@ def test_checkpoint_scope_release_failure_never_masks_body_error(
 ):
     leaked = []
 
-    def failing_release(df, caches=False):
+    def failing_release(df):
         leaked.append(df)
         raise RuntimeError("simulated release failure")
 
@@ -304,7 +267,7 @@ def test_checkpoint_scope_clean_exit_still_surfaces_single_failure(
     silent per-session leak."""
     leaked = []
 
-    def failing_release(df, caches=False):
+    def failing_release(df):
         leaked.append(df)
         raise RuntimeError("simulated release failure")
 

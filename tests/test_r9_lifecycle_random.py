@@ -1,57 +1,65 @@
 """Randomized (seeded, deterministic) lifecycle invariant runs.
 
-A model-based sequence of {pin-escaped, derive+cache, materialize,
-unpersist, release-attempt, re-release-freed} operations against a
-Python-side ownership model, checking after every step that:
+A model-based sequence of {pin into the open scope, derive+cache,
+unpersist, exit scope, release a survivor, re-release a freed pin}
+operations against a Python-side ownership model, checking after every
+step that:
 
-* ``release()`` frees a checkpoint IFF no REGISTERED cache depends on
-  it (the r9 global barrier — sibling caches included);
-* a protected release returns False and leaves live readers working;
-* releasing an ALREADY-FREED checkpoint (through a derived plan, as a
-  double-release bug would) returns False and never raises;
-* after full teardown (all caches unpersisted, all checkpoints
-  released) block-manager storage returns to the session baseline.
+* a scope exit frees each of its pins IFF no REGISTERED cache depends
+  on it (the r9 global barrier — sibling caches included);
+* a pin the barrier kept stays readable, and releasing it later frees
+  it IFF no cache depends on it by then;
+* releasing an ALREADY-FREED pin returns False and never raises;
+* after full teardown (all caches unpersisted, all survivors released)
+  block-manager storage returns to the session baseline.
 
 The example-based tests in test_r8_lifecycle.py / test_r9_advice.py pin
 individual shapes; this sweeps compositions of them.
 """
 
+import contextlib
 import random
 
 import pytest
 
-from conftest import settled_rdd_count, wait_storage
+from conftest import is_live, settled_rdd_count, wait_storage
 from elephant_twin_spark.operators import lifecycle
 
 
 class _Model:
-    """Python-side ground truth for what release() must do."""
+    """Python-side ground truth for what scope exit and release must do."""
 
     def __init__(self, spark):
         self.spark = spark
         self.n = 0
-        self.checkpoints = {}   # idx -> DataFrame (escaped pin, alive)
+        self.scope = None
+        self.in_scope = {}      # idx -> DataFrame (pinned in the open scope)
+        self.survivors = {}     # idx -> DataFrame (kept by the barrier)
         self.freed = {}         # idx -> DataFrame (released, unusable)
         self.caches = {}        # cache idx -> (df, checkpoint idx, materialized)
         self.n_caches = 0
+        self.open_scope()
+
+    def open_scope(self):
+        self.scope = lifecycle.checkpoint_scope()
+        self.scope.__enter__()
+
+    def live(self):
+        return {**self.in_scope, **self.survivors}
 
     def pin(self, rng):
         idx = self.n
         self.n += 1
-        df = lifecycle.pin(
-            self.spark.range(1_000 + idx).selectExpr(
-                "id", f"id * {idx + 2} as v"
-            ),
-            escape=True,
+        self.in_scope[idx] = lifecycle.pin(
+            self.spark.range(1_000 + idx).selectExpr("id", f"id * {idx + 2} as v")
         )
-        self.checkpoints[idx] = df
 
     def derive_cache(self, rng):
-        if not self.checkpoints:
+        live = self.live()
+        if not live:
             return
-        dep = rng.choice(sorted(self.checkpoints))
-        df = self.checkpoints[dep].selectExpr("id", f"v + {self.n_caches} as w")
-        cached = df.cache()
+        dep = rng.choice(sorted(live))
+        cached = live[dep].selectExpr("id", f"v + {self.n_caches} as w").cache()
         materialized = rng.random() < 0.7
         if materialized:
             assert cached.count() == 1_000 + dep
@@ -68,32 +76,41 @@ class _Model:
     def protected(self, ck_idx):
         return any(dep == ck_idx for _, dep, _ in self.caches.values())
 
-    def release_attempt(self, rng):
-        if not self.checkpoints:
+    def exit_scope(self, rng=None):
+        self.scope.__exit__(None, None, None)
+        for idx, df in sorted(self.in_scope.items()):
+            expected_live = self.protected(idx)
+            assert is_live(df) is expected_live, (
+                f"scope exit: ck{idx} live={is_live(df)}, "
+                f"expected {expected_live}"
+            )
+            (self.survivors if expected_live else self.freed)[idx] = df
+        self.in_scope = {}
+        self.open_scope()
+
+    def release_survivor(self, rng):
+        if not self.survivors:
             return
-        idx = rng.choice(sorted(self.checkpoints))
-        # release through a derived plan, as operators' callers do
-        derived = self.checkpoints[idx].where("v >= 0")
+        idx = rng.choice(sorted(self.survivors))
         expected = not self.protected(idx)
-        got = lifecycle.release(derived)
+        got = lifecycle.release(self.survivors[idx])
         assert got is expected, (
-            f"release(ck{idx}) -> {got}, expected {expected} "
-            f"(protected={self.protected(idx)})"
+            f"release(ck{idx}) -> {got}, expected {expected}"
         )
         if expected:
-            self.freed[idx] = self.checkpoints.pop(idx)
+            self.freed[idx] = self.survivors.pop(idx)
 
     def release_freed(self, rng):
         """Double-release: must be a calm no-op, never True, never raise."""
         if not self.freed:
             return
         idx = rng.choice(sorted(self.freed))
-        assert lifecycle.release(self.freed[idx].where("v >= 0")) is False
+        assert lifecycle.release(self.freed[idx]) is False
 
     def check_reads(self):
         # every live checkpoint must still answer queries
-        for idx in sorted(self.checkpoints):
-            assert self.checkpoints[idx].count() == 1_000 + idx
+        for idx, df in sorted(self.live().items()):
+            assert df.count() == 1_000 + idx
         # every materialized cache must still serve
         for cidx, (cached, dep, materialized) in sorted(self.caches.items()):
             if materialized:
@@ -103,12 +120,12 @@ class _Model:
         for cached, _, _ in self.caches.values():
             cached.unpersist(True)
         self.caches.clear()
-        for idx in sorted(self.checkpoints):
-            assert lifecycle.release(self.checkpoints[idx]) is True
-        for idx in sorted(self.freed):
-            assert lifecycle.release(self.freed[idx]) is False
-        self.checkpoints.clear()
-        self.freed.clear()
+        self.scope.__exit__(None, None, None)
+        assert not any(is_live(df) for df in self.in_scope.values())
+        for idx in sorted(self.survivors):
+            assert lifecycle.release(self.survivors[idx]) is True
+        for df in self.freed.values():
+            assert lifecycle.release(df) is False
 
 
 @pytest.mark.parametrize("seed", [1, 17, 42])
@@ -121,12 +138,18 @@ def test_lifecycle_random_sequences_hold_invariants(spark, seed):
         ops.append(
             rng.choice(
                 [m.pin, m.derive_cache, m.derive_cache, m.unpersist_cache,
-                 m.release_attempt, m.release_attempt, m.release_freed]
+                 m.exit_scope, m.release_survivor, m.release_freed]
             )
         )
-    for op in ops:
-        op(rng)
-        m.check_reads()
+    try:
+        for op in ops:
+            op(rng)
+            m.check_reads()
+    except BaseException:
+        # leave no open scope on this thread for later tests
+        with contextlib.suppress(Exception):
+            m.scope.__exit__(None, None, None)
+        raise
     m.teardown()
     snap = wait_storage(spark, lambda s: s["n_rdds"] <= base, timeout_s=8.0)
     assert snap["n_rdds"] <= base, snap

@@ -151,9 +151,7 @@ def main():
         from elephant_twin_spark.operators.pipeline import clean
 
         df = clean.clean_corpus(docs, "text", "doc_id", near_dup=False)[1]
-        out = df.groupBy("reason").count().collect()
-        lifecycle.release(df)
-        return out
+        return df.groupBy("reason").count().collect()
 
     _mix_w = {"en": 0.5, "de": 0.15, "es": 0.15, "fr": 0.1, "zh": 0.1}
 
@@ -221,9 +219,7 @@ def main():
             docs, "text", "doc_id", num_perm=16, num_bands=4, threshold=0.7,
             edge_mode=edge_mode,
         )
-        out = df.where("NOT is_canonical").count()
-        lifecycle.release(df)
-        return out
+        return df.where("NOT is_canonical").count()
 
     def _lsh_gate():
         idx, probe = lsh_gate_setup()
