@@ -3075,6 +3075,10 @@ _ROTATION_PINS: list = [
     # index kind — the block-index path is covered by the
     # idx_predicate_* fills below
     "zone_range_scan", "bloom_user_lookup",
+    # minhash_signatures now projects the shared carried-shingle pass
+    # (the near-dup kernel's single shingle pass; CC's driver path is
+    # covered by near_dup_components and cluster_refresh above)
+    "minhash_signatures", "minhash_jaccard_error",
 ]
 _ROTATION_R17 = _ROTATION_PINS + [
     # r13-vintage cohort, CORRECTNESS_r13 order (the oldest driver

@@ -10,7 +10,8 @@ accumulate and turn into execution-memory spills in unrelated later
 queries (round-5 verdict finding on ``q_minhash_lsh``).
 
 The rule: **the innermost active** :func:`checkpoint_scope` **owns
-every** :func:`pin` **made inside it and frees it on exit.** A
+every** :func:`pin` **made inside it and frees it on exit** (a pin the
+cache barrier keeps passes to the next outer scope). A
 DataFrame an operator returns — checkpoint-backed or not — stays valid
 until the caller's innermost scope exits; consume it inside that
 scope. With no active scope a pin is a plain unowned
@@ -19,7 +20,8 @@ pins (one that collects to the driver) runs under its own scope.
 
 :func:`release` frees one pin early. The package calls it only on
 handles it pinned itself in the same function — connected components'
-superseded rounds, a raise path that will not consume its pin.
+superseded rounds and edge pins, a raise path that will not consume
+its pin.
 
 A local checkpoint truncates lineage: after release any action on a
 plan over it raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The one
@@ -213,7 +215,11 @@ def checkpoint_scope() -> Iterator[List[DataFrame]]:
             n = dedup.near_dup_clusters(docs, "text", "doc_id").count()
         # every checkpoint behind that result is freed here
 
-    Scopes nest; each releases only its own pins.
+    Scopes nest; each releases only its own pins. A pin that the cache
+    barrier keeps (see :func:`release`) passes to the next outer scope,
+    which tries again on its own exit — so unpersisting the cache inside
+    that scope lets it free the pin. With no outer scope the pin stays
+    unowned.
 
     Exit is all-or-log, never first-failure-stops (r8 advisor): each
     pin is released in its own try, so one bad release cannot leak
@@ -232,13 +238,17 @@ def checkpoint_scope() -> Iterator[List[DataFrame]]:
         body_failed = True
         raise
     finally:
-        _scopes().pop()
+        scopes = _scopes()
+        scopes.pop()
         failures: List[Exception] = []
         for df in pinned:
             try:
-                release(df)
+                kept = not release(df) and df._ets_checkpoint.getStorageLevel().isValid()
             except Exception as exc:  # noqa: BLE001 — aggregated below
                 failures.append(exc)
+                continue
+            if kept and scopes:
+                scopes[-1].append(df)
         if failures and not body_failed:
             raise ExceptionGroup(
                 "checkpoint_scope: release failed for "

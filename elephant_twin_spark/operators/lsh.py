@@ -358,7 +358,10 @@ class LshIndex:
         :meth:`append_docs`-ed after the build — the index stores only
         buckets, never text, so grown docs verify against wherever their
         text was accepted to (one id space across all corpus sources).
-        ``probe_sigs``: see :meth:`candidate_pairs`.
+        ``probe_sigs``: see :meth:`candidate_pairs`; here it must also
+        carry each probe's ``sh`` shingle column (the streaming gate's
+        pinned batch signatures do), which the Jaccard check reads
+        instead of shingling the probe again.
 
         The candidate table is pinned (``localCheckpoint``) before use:
         it feeds BOTH the corpus-id collect and the verify join, and
@@ -395,10 +398,15 @@ class LshIndex:
                     F.col(id_col).alias("corpus_id"), F.col(text_col).alias("_ctext")
                 )
             )
-        probe_sh = docs.select(
-            F.col(id_col).alias("probe_id"),
-            dedup.word_shingles(F.col(text_col), self.shingle_k).alias("sh_a"),
-        )
+        if probe_sigs is None:
+            probe_sh = docs.select(
+                F.col(id_col).alias("probe_id"),
+                dedup.word_shingles(F.col(text_col), self.shingle_k).alias("sh_a"),
+            )
+        else:
+            probe_sh = probe_sigs.select(
+                F.col("id").alias("probe_id"), F.col("sh").alias("sh_a")
+            )
         # Bounded candidate-id pushdown (r17; supersedes the r16
         # unconditional F.broadcast, whose hint bypassed
         # autoBroadcastJoinThreshold on a set that a hot bucket can make

@@ -154,6 +154,44 @@ def shingle_jaccard(a: Column, b: Column) -> Column:
 
 # ----------------------------------------------------------------- minhash
 
+def _shingled_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int,
+    shingle_k: int,
+    hash_fn: str,
+    carry_cols: tuple = (),
+) -> DataFrame:
+    """``(id, [carry_cols...,] sh, mh0..mh{K-1})``: the one shingle pass
+    that every MinHash consumer shares. ``sh`` is the document's distinct
+    k-shingle array and every ``mh`` lane is hashed from that same
+    column, so a consumer that also verifies Jaccard
+    (:func:`minhash_near_dup_pairs`, the streaming gate's probe) reads
+    ``sh`` here instead of shingling the document a second time."""
+    sh = _fan_out(df.where(F.col(text_col).isNotNull())).select(
+        F.col(id_col).alias("id"),
+        *[F.col(c) for c in carry_cols],
+        word_shingles(F.col(text_col), shingle_k).alias("sh"),
+    )
+
+    def lane(i: int) -> Column:
+        # single-argument lambdas only: a 2-arg lambda would be given the
+        # ELEMENT INDEX as its second argument by F.transform
+        if hash_fn == "xxhash64":
+            h = F.transform("sh", lambda s: F.xxhash64(F.lit(i), s))
+        elif hash_fn == "md5":
+            h = F.transform(
+                "sh",
+                lambda s: F.md5(F.concat(F.lit(str(i) + "|"), s).cast("binary")),
+            )
+        else:
+            raise ValueError(hash_fn)
+        return F.array_min(h).alias(f"mh{i}")
+
+    return sh.select("id", *carry_cols, "sh", *[lane(i) for i in range(num_perm)])
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
@@ -182,27 +220,9 @@ def minhash_signatures(
     needed. Null-text docs produce no signature row (matching the
     explode form, which drops them).
     """
-    sh = _fan_out(df.where(F.col(text_col).isNotNull())).select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in carry_cols],
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    )
-
-    def lane(i: int) -> Column:
-        # single-argument lambdas only: a 2-arg lambda would be given the
-        # ELEMENT INDEX as its second argument by F.transform
-        if hash_fn == "xxhash64":
-            h = F.transform("sh", lambda s: F.xxhash64(F.lit(i), s))
-        elif hash_fn == "md5":
-            h = F.transform(
-                "sh",
-                lambda s: F.md5(F.concat(F.lit(str(i) + "|"), s).cast("binary")),
-            )
-        else:
-            raise ValueError(hash_fn)
-        return F.array_min(h).alias(f"mh{i}")
-
-    return sh.select("id", *carry_cols, *[lane(i) for i in range(num_perm)])
+    return _shingled_signatures(
+        df, text_col, id_col, num_perm, shingle_k, hash_fn, carry_cols
+    ).select("id", *carry_cols, *[f"mh{i}" for i in range(num_perm)])
 
 
 def band_table(
@@ -229,9 +249,10 @@ def band_table(
 
 def _band_hash_exprs(num_perm: int, num_bands: int, hash_fn: str) -> "list[Column]":
     """One band-hash Column per band over the mh* signature lanes —
-    shared by :func:`band_table` (persisted index) and
-    :func:`lsh_candidate_pairs` (in-flight dedup) so the two surfaces
-    can never disagree on bucket assignment."""
+    shared by :func:`band_table` (persisted index),
+    :func:`lsh_candidate_pairs` and :func:`minhash_near_dup_pairs`
+    (in-flight dedup) so the surfaces can never disagree on bucket
+    assignment."""
     rows_per_band = num_perm // num_bands
     if hash_fn == "xxhash64":
         return [
@@ -291,17 +312,24 @@ def lsh_candidate_pairs(
     threshold against the bucket hub; a member similar to a sibling but
     NOT to the hub can lose that edge (recall trade documented at the
     call sites that choose it)."""
-    if edge_mode not in ("all_pairs", "star"):
-        raise ValueError(edge_mode)
     bands = signatures.select(
         "id",
         F.posexplode(
             F.array(*_band_hash_exprs(num_perm, num_bands, hash_fn))
         ).alias("band", "band_hash"),
     )
-    if max_bucket_size is not None:
-        from pyspark.sql.window import Window
+    return _bucket_pairs(bands, edge_mode, max_bucket_size)
 
+
+def _bucket_pairs(
+    bands: DataFrame, edge_mode: str, max_bucket_size: Optional[int] = None
+) -> DataFrame:
+    """``(id_a, id_b)`` from an ``(id, band, band_hash)`` relation — the
+    within-bucket self-join of :func:`lsh_candidate_pairs`, shared with
+    :func:`minhash_near_dup_pairs`."""
+    if edge_mode not in ("all_pairs", "star"):
+        raise ValueError(edge_mode)
+    if max_bucket_size is not None:
         sizes = bands.groupBy("band", "band_hash").agg(
             F.count(F.lit(1)).alias("_bsz")
         )
@@ -332,56 +360,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_verify_pairs(
-    candidates: DataFrame,
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs only → near-dup pairs
-    ``(id_a, id_b, jaccard)`` above threshold. The expensive exact measure
-    runs on LSH candidates, not on all pairs.
-
-    Scale shape: the shingle table is first SEMI-JOINED down to the docs
-    that appear in any candidate pair (bounded by 2×|candidates|, not
-    corpus size) and pinned with ``localCheckpoint``, so the corpus-wide
-    shingle computation runs exactly once — not once per side of the
-    pair join (Spark would otherwise recompute the whole subtree for the
-    ``id_a`` and ``id_b`` joins).
-
-    The semi-join runs on the RAW ``(id, text)`` projection and the
-    shingle expression is applied AFTER it (r16 optimization): Catalyst
-    has no rule to move a Project above a Join, so the previous
-    project-then-join order computed shingles for EVERY corpus row and
-    shuffled the shingle arrays into a sort-merge semi join — at sf0.1
-    that is a full second corpus shingle pass (the verify stage's
-    dominant cost), at 100 TB it is a corpus-sized exchange of shingle
-    arrays. Joining first means only candidate docs (bounded by
-    2×|pairs|) are ever shingled, and the exchange — when AQE doesn't
-    broadcast the tiny id set outright — carries raw text, not the ~k×
-    larger shingle expansion. Same rows out, plan shape pinned in
-    plans/r16/q_minhash_lsh_{before,after}.txt."""
-    ids = (
-        candidates.select(F.col("id_a").alias("id"))
-        .unionByName(candidates.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sh = lifecycle.pin(
-        _fan_out(df)
-        .select(F.col(id_col).alias("id"), F.col(text_col).alias("_vtext"))
-        .join(ids, "id", "leftsemi")
-        .select("id", word_shingles(F.col("_vtext"), shingle_k).alias("sh"))
-    )
-    j = (
-        candidates.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn("jaccard", shingle_jaccard(F.col("sh_a"), F.col("sh_b")))
-    )
-    return j.where(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str,
@@ -394,29 +372,55 @@ def minhash_near_dup_pairs(
     hash_fn: str = "xxhash64",
     sigs: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """End-to-end MinHash-LSH near-dedup: signature → bands → candidates →
-    exact Jaccard filter. The candidate-pair table (tiny: near-dup pairs
-    only, not the corpus) is pinned with ``localCheckpoint`` so the
-    signature+banding pipeline isn't re-run by each of the verify stage's
-    two consumers. ``edge_mode="star"`` makes the candidate stage linear
-    in duplicate-group size (see :func:`lsh_candidate_pairs`) — the
-    right choice when the output feeds connected components rather than
-    an exhaustive pair report. ``hash_fn="md5"`` makes the candidate
-    graph engine-independent (oracle-reproducible) at higher hash cost.
+    """End-to-end MinHash-LSH near-dedup: ``(id_a, id_b, jaccard)`` for
+    every LSH candidate pair whose exact shingle Jaccard clears
+    ``threshold``.
 
-    ``sigs`` accepts precomputed :func:`minhash_signatures` output for
-    ``df`` (MUST be built with the same num_perm/shingle_k/hash_fn) —
-    the streaming gate shares one signature pass between the vs-corpus
-    probe and this intra-batch stage instead of paying the shingle +
-    K-lane-hash cost twice per micro-batch (r9 review finding)."""
-    if sigs is None:
-        sigs = minhash_signatures(
-            df, text_col, id_col, num_perm, shingle_k, hash_fn=hash_fn
-        )
-    cands = lifecycle.pin(
-        lsh_candidate_pairs(sigs, num_perm, num_bands, edge_mode=edge_mode, hash_fn=hash_fn)
+    Shape: each document is shingled ONCE. One pass computes ``(id, sh,
+    band hashes)`` — the signature lanes are hashed from that same
+    ``sh`` — and that one relation is pinned (``localCheckpoint``). The
+    band self-join (:func:`lsh_candidate_pairs`' bucket join) and both
+    sides of the Jaccard join read it, so the verify stage needs no
+    second corpus read, no candidate-id semi-join and no second shingle
+    pass; a caller that re-evaluates the result re-runs only the joins
+    over the pin. The price is storage: the pin holds every document's
+    shingle array until the caller's scope exits, where a
+    candidate-first shape holds only the candidate documents'. On a
+    corpus with few duplicates that is many times more bytes in about
+    the same time; pinning the verified pairs instead, so the shingle pin
+    could be freed early, measured slower on a corpus with many (the
+    32× measurements are in CHANGES.md).
+
+    ``edge_mode="star"`` makes the candidate stage linear in
+    duplicate-group size (see :func:`lsh_candidate_pairs`) — the right
+    choice when the output feeds connected components rather than an
+    exhaustive pair report. ``hash_fn="md5"`` makes the candidate graph
+    engine-independent (oracle-reproducible) at higher hash cost.
+
+    ``sigs`` accepts a precomputed carried-shingle signature relation
+    for ``df`` — ``minhash_signatures`` lanes plus the ``sh`` column, as
+    the streaming gate builds and pins it once per batch, built with the
+    same num_perm/shingle_k/hash_fn. The caller owns that relation, so
+    nothing is pinned here, and the batch is shingled once for both its
+    vs-corpus probe and this intra-batch stage."""
+    owned = sigs is None
+    if owned:
+        sigs = _shingled_signatures(df, text_col, id_col, num_perm, shingle_k, hash_fn)
+    base = sigs.select(
+        "id", "sh", F.array(*_band_hash_exprs(num_perm, num_bands, hash_fn)).alias("bh")
     )
-    return jaccard_verify_pairs(cands, df, text_col, id_col, shingle_k, threshold)
+    if owned:
+        base = lifecycle.pin(base)
+    bands = base.select("id", F.posexplode("bh").alias("band", "band_hash"))
+    sh = base.select("id", "sh")
+    return (
+        _bucket_pairs(bands, edge_mode)
+        .join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
+        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
+        .withColumn("jaccard", shingle_jaccard(F.col("sh_a"), F.col("sh_b")))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 # ----------------------------------------------------------------- simhash
@@ -609,6 +613,19 @@ def simhash_md5_near_dup_pairs(
 
 # ------------------------------------------------- duplicate clustering
 
+#: Largest deduplicated edge relation, in rows, that
+#: :func:`connected_components` labels on the driver (see its
+#: docstring for the measured crossover).
+_CC_DRIVER_EDGES = 100_000
+
+# exact integer id types: integral types and decimals of scale 0. Their
+# labels sum exactly in decimal(38,0) (the rounds' convergence probe),
+# and with strings (UTF-8 byte order is code-point order) they are the
+# ids whose Python equality and order match Spark's (the driver path);
+# float and double ids qualify for neither
+_EXACT_INT_TYPES = r"tinyint|smallint|int|bigint|decimal\(\d+,0\)"
+
+
 def connected_components(
     pairs: DataFrame,
     src_col: str = "id_a",
@@ -618,33 +635,45 @@ def connected_components(
 ) -> DataFrame:
     """``(node, component)`` over the undirected graph of ``pairs`` —
     component = min node id reachable. Only nodes appearing in some pair
-    are returned; callers union isolated rows back as singletons.
+    are returned; callers union isolated rows back as singletons. NULL
+    endpoints and self-loops are dropped.
 
-    Algorithm: min-label propagation — each round every node takes the
-    min of its own label and its neighbors' labels, iterated to a
-    fixpoint. Rounds needed = graph diameter, which for near-dup
-    clusters (cliques plus a few chains) is small; each round is ONE
-    shuffle (join + groupBy on node). ``localCheckpoint`` after each
-    round cuts the lineage so the plan doesn't grow exponentially —
-    the standard hazard of iterative DataFrame algorithms.
+    The deduplicated edges are pinned first, so ``pairs`` is evaluated
+    once whichever path runs. Then two paths, one answer (the min-label
+    fixpoint):
 
-    Pointer-doubling escalation (r17): from round ``hop_after`` on,
-    each round additionally hops through the previous round's labels
-    (``comp ← min(comp, labels[comp])``), doubling the propagation
-    distance per round — O(log d) rounds on a diameter-d graph instead
-    of O(d). The hop joins the round's OWN output against the already
-    checkpointed previous labels, so it never re-evaluates the groupBy;
-    any label a hop returns is by construction reachable from ``comp``,
-    labels stay monotonically non-increasing, and the fixpoint — and
-    therefore every row out — is unchanged (interleaved A/B,
-    OPTIMIZATION_r17.md: identical rows on the bench near-dup graph;
-    on a 3000-edge chain 13.8-18.9 s → 5.0-10.3 s AND the plain form
-    silently returned unconverged labels there, ``max_iter`` capping
-    out at 50 of the 3000 needed rounds — with the hop, 50 rounds
-    cover diameter ~2^47). The first ``hop_after`` rounds stay plain:
-    near-dup graphs (cliques plus short chains) converge within them,
-    and the bench-graph A/B shows the hop join is pure overhead there
-    (warm 1.11 s plain vs 1.30 s always-on doubling).
+    - **Driver**, when the edges number at most ``_CC_DRIVER_EDGES``
+      rows and the ids are integral, ``decimal(p,0)`` or string. One
+      bounded ``take`` reads the pinned edges, the pin is freed,
+      union-find with min-id roots labels them, and the result is a
+      local relation with the id column types and no checkpoint behind
+      it. Near-dup graphs are this size, and on them the rounds below
+      are bound by job launches: one label-sum job and one checkpoint
+      per round for a graph the driver labels in milliseconds.
+    - **Rounds**, from the pinned edges, above the bound or for
+      float/double ids (whose Python equality and order are not
+      Spark's). Min-label propagation: each round every node takes the
+      min of its own and its neighbours' labels, one shuffle per round,
+      and a ``localCheckpoint`` per round cuts the lineage so the plan
+      does not grow with the round count.
+      From round ``hop_after`` on, each round also hops through the
+      previous round's labels (``comp ← min(comp, labels[comp])``),
+      doubling the propagation distance: O(log d) rounds on a diameter-d
+      graph instead of O(d) (without it a long chain ran out of
+      ``max_iter`` rounds), and the same fixpoint, because every hop
+      target is reachable from ``comp``. The first rounds stay plain:
+      cliques and short chains converge there, and the hop join is
+      overhead. Integral and exact-decimal ids detect convergence with
+      one label-sum aggregate (labels only decrease, so the sum moves
+      iff some label did); other ids with a join+count of changed
+      labels. ``max_iter`` and ``hop_after`` govern this path only.
+
+    The bound sits below the measured crossover of the two paths and
+    caps the driver memory the collected edges take. Measured on 4-core
+    local mode over star-shaped graphs, both paths from the pinned
+    edges (min of 3, labels identical): 4,500 edges 0.53 s driver vs
+    1.03 s rounds; 50k 0.70 vs 1.34 s; 100k 1.40 vs 1.67 s; 200k 2.12
+    vs 1.78 s.
 
     Raises ``RuntimeError`` when ``max_iter`` rounds end with labels
     still changing, after freeing the loop's checkpoints: unconverged
@@ -653,39 +682,83 @@ def connected_components(
     reached, so ``max_iter`` must cover that round too: a graph whose
     labels settle exactly in round ``max_iter`` also raises.
 
-    Lifecycle: the result is backed by the final round's checkpoint —
-    consume it inside your ``checkpoint_scope`` (see
-    :mod:`.lifecycle`).
+    Lifecycle: on the rounds path the result is backed by the final
+    round's checkpoint — consume it inside your ``checkpoint_scope``
+    (see :mod:`.lifecycle`).
     """
-    edges = (
+    # pinned before the bounded take, so a graph above the bound starts
+    # its rounds from these rows instead of evaluating ``pairs`` again
+    edges = lifecycle.pin(
         pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
         .where(F.col("s") != F.col("d"))
         .distinct()
     )
-    edges = lifecycle.pin(
-        edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
+    types = dict(edges.dtypes)
+    if types["s"] == types["d"] and re.fullmatch(
+        _EXACT_INT_TYPES + "|string", types["s"]
+    ):
+        rows = edges.take(_CC_DRIVER_EDGES + 1)
+        if len(rows) <= _CC_DRIVER_EDGES:
+            lifecycle.release(edges)
+            return _driver_components(
+                pairs.sparkSession, rows, edges.schema["s"].dataType
+            )
+    return _round_components(edges, max_iter, hop_after)
+
+
+def _driver_components(spark, rows, id_type) -> DataFrame:
+    """Union-find over collected ``(s, d)`` edge rows. The smaller root
+    always wins a union, so every root is its component's min id — the
+    fixpoint of :func:`_round_components`."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for s, d in rows:
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    nodes = list(parent)
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
     )
+    # from an Arrow table Spark builds a LocalRelation, whose exact size
+    # lets the planner broadcast it into the caller's join
+    table = pa.table({"node": nodes, "component": [find(n) for n in nodes]})
+    return spark.createDataFrame(table, schema)
+
+
+def _round_components(edges: DataFrame, max_iter: int, hop_after: int) -> DataFrame:
+    """The distributed min-label rounds of :func:`connected_components`,
+    from its pinned ``(s, d)`` edges; frees that pin."""
+    try:
+        both = lifecycle.pin(
+            edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
+        )
+    finally:
+        lifecycle.release(edges)
+    edges = both
     labels = lifecycle.pin(
         edges.select(F.col("s").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
     )
-    # convergence detector: for INTEGRAL/decimal ids the label-sum (exact
-    # decimal — no silent long overflow) is componentwise non-increasing
-    # and strictly decreases iff ANY label changed, so one tiny
-    # aggregation per round suffices. float/double ids are excluded — a
-    # decimal(38,0) cast rounds, so a real label change (2.4→2.2) can
-    # leave the sum unchanged and converge prematurely; they take the
-    # join+count change detector, as do non-numeric (string) ids. Where
-    # both apply, the label-sum measured faster (sf0.1, CC step alone:
-    # 0.76-0.88 s vs 0.87-1.01 s for join+count).
-    comp_type = dict(labels.dtypes)["comp"]
-    # decimals only with scale 0: decimal(p, s>0) ids round under the
-    # decimal(38,0) sum cast — the same premature-convergence hazard as
-    # float/double
-    numeric = comp_type in {
-        "tinyint", "smallint", "int", "bigint",
-    } or bool(re.fullmatch(r"decimal\(\d+,0\)", comp_type))
+    # label-sum detector: an exact decimal(38,0) sum, so no silent long
+    # overflow. Float/double ids and decimals with scale > 0 take the
+    # join+count detector instead: the decimal(38,0) cast rounds them,
+    # so a real label change (2.4→2.2) could leave the sum unchanged and
+    # converge prematurely. Where both apply, the label-sum measured
+    # faster (sf0.1, CC step alone: 0.76-0.88 s vs 0.87-1.01 s).
+    numeric = bool(re.fullmatch(_EXACT_INT_TYPES, dict(labels.dtypes)["comp"]))
 
     def label_sum(l: DataFrame):
         return l.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
@@ -784,9 +857,14 @@ def near_dup_clusters(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Every row of ``df`` labeled with its duplicate-cluster id:
-    MinHash-LSH candidate pairs → exact-Jaccard verify → connected
-    components → ``(id, cluster_id, is_canonical)``; singletons get
-    their own id as cluster.
+    :func:`minhash_near_dup_pairs` (each document shingled once, one
+    pinned relation) → :func:`connected_components` →
+    ``(id, cluster_id, is_canonical)``; singletons get their own id as
+    cluster. A verified edge set within ``_CC_DRIVER_EDGES`` rows — the
+    near-dup case — is labeled on the driver, so the clusters op keeps
+    one pin (the kernel's) and the labels are a broadcastable local
+    relation; a larger one runs the distributed rounds from the pinned
+    edges, which never shingle again.
 
     Canonical choice: min id by default; with ``prefer_col`` (a numeric
     column of ``df``, e.g. a quality score) the canonical is the
@@ -864,9 +942,8 @@ def containment_verify_pairs(
     dilutes the score), which is why training-data pipelines check both.
     Emits pairs where EITHER direction clears the threshold.
 
-    Shape: like :func:`jaccard_verify_pairs`, the candidate-id semi-join
-    runs BEFORE the shingle projection (r16) so only candidate docs are
-    shingled — Catalyst cannot reorder a Project above a Join itself —
+    Shape: the candidate-id semi-join runs BEFORE the shingle
+    projection so only candidate docs are shingled — Catalyst cannot reorder a Project above a Join itself —
     and the pinned result is shared by both sides of the pair join."""
     ids = (
         candidates.select(F.col("id_a").alias("id"))

@@ -121,18 +121,16 @@ def gate_batch(
     (corpus id or lower batch id). Exposed separately so the batch and
     streaming paths share one implementation (stream == batch).
 
-    The batch's MinHash signatures are computed ONCE and shared by the
-    vs-corpus probe and the intra-batch candidate stage (r9 review:
-    previously each recomputed shingle + K-lane hashing over the whole
-    batch — the dominant per-batch cost on the hot ingest path). The
-    pin registers with the ambient checkpoint_scope (the streaming
-    wrapper holds one per batch), same discipline as
-    minhash_near_dup_pairs' own candidate pin."""
+    The batch is shingled ONCE: its carried-shingle signatures
+    (``minhash_signatures`` lanes plus the ``sh`` column) are pinned and
+    feed the vs-corpus probe's banding and Jaccard check and the
+    intra-batch candidate and verify stages. The pin registers with the
+    ambient checkpoint_scope (the streaming wrapper holds one per
+    batch)."""
     sigs = lifecycle.pin(
-        dedup.minhash_signatures(
+        dedup._shingled_signatures(
             batch_df, text_col, id_col,
-            num_perm=index.num_perm, shingle_k=index.shingle_k,
-            hash_fn=index.hash_fn,
+            index.num_perm, index.shingle_k, index.hash_fn,
         )
     )
     vs_corpus = index.gate(

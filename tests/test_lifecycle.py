@@ -67,6 +67,15 @@ def _gate(spark, idx):
     return idx.gate(probe, "text", "doc_id", threshold=0.5).where("is_near_dup").count()
 
 
+def _cc_rounds(spark):
+    # the rounds path pins; within the edge bound the driver pins nothing
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "_CC_DRIVER_EDGES", 0)
+        return dedup.connected_components(
+            spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
+        ).collect()
+
+
 # name -> consume(spark, lsh_index); every call runs inside one scope
 _OPERATORS = {
     "near_dup_clusters": lambda s, _: dedup.near_dup_clusters(
@@ -76,9 +85,7 @@ _OPERATORS = {
         _docs(s), "text", "doc_id", min_tokens=3, allowed_langs=("en",),
         num_perm=8, num_bands=4, threshold=0.5,
     )[1].groupBy("reason").count().collect(),
-    "connected_components": lambda s, _: dedup.connected_components(
-        s.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    ).collect(),
+    "connected_components": lambda s, _: _cc_rounds(s),
     "minhash_near_dup_pairs": lambda s, _: dedup.minhash_near_dup_pairs(
         _docs(s), "text", "doc_id", num_perm=8, num_bands=4, threshold=0.5
     ).count(),
@@ -134,6 +141,25 @@ def test_ann_recall_audit_frees_its_pins_without_a_scope(spark):
         emb, "embedding", "vec_id", [0, 1], base[:4], books, k=3, bits=2
     )
     assert {r["method"] for r in out.collect()} == {"lsh", "ivf", "pq", "ivf_pq"}
+    snap = wait_storage(
+        spark, lambda s: s["n_rdds"] <= base_rdds and s["n_blocks"] <= base_blocks
+    )
+    assert snap["n_rdds"] <= base_rdds and snap["n_blocks"] <= base_blocks, snap
+
+
+def test_pin_kept_by_cache_barrier_passes_to_outer_scope(spark):
+    """A pin that a registered cache keeps alive at its scope's exit is
+    owned by the next outer scope, which frees it once the cache is
+    gone."""
+    base_rdds = settled_rdd_count(spark)
+    base_blocks = lifecycle.storage_snapshot(spark)["n_blocks"]
+    with lifecycle.checkpoint_scope():
+        with lifecycle.checkpoint_scope():
+            ck = lifecycle.pin(spark.range(5_000).selectExpr("id", "id * 7 as v"))
+            cached = ck.where("v % 2 = 0").cache()
+            assert cached.count() == 2_500
+        assert ck._ets_checkpoint.getStorageLevel().isValid()
+        cached.unpersist(True)
     snap = wait_storage(
         spark, lambda s: s["n_rdds"] <= base_rdds and s["n_blocks"] <= base_blocks
     )

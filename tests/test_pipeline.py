@@ -489,9 +489,10 @@ def test_containment_catches_embedded_doc(spark, docs):
     # the short doc is fully contained in the long one (b in a direction)
     assert r["cont_b_in_a"] >= 0.9
     # but plain Jaccard on the same pair is well below near-dup range
-    jac = dedup.jaccard_verify_pairs(
-        cands, extra, "text", "doc_id", threshold=0.0
-    ).collect()[0]["jaccard"]
+    sh = extra.select(dedup.word_shingles(F.col("text"), 3).alias("sh")).collect()
+    jac = spark.createDataFrame(
+        [(sh[0]["sh"], sh[1]["sh"])], "a array<string>, b array<string>"
+    ).select(dedup.shingle_jaccard(F.col("a"), F.col("b"))).first()[0]
     assert jac < 0.8
 
 

@@ -66,40 +66,6 @@ def dup_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
 
 
-def test_jaccard_verify_join_before_shingle_same_rows(dup_docs):
-    """The r16 semi-join-before-shingle reorder in jaccard_verify_pairs
-    returns exactly the rows of the old project-then-join shape."""
-    sigs = dedup.minhash_signatures(dup_docs, "text", "doc_id", 16)
-    cands = dedup.lsh_candidate_pairs(sigs, 16, 4)
-    new = dedup.jaccard_verify_pairs(cands, dup_docs, "text", "doc_id", 3, 0.7)
-
-    # old shape, stated inline
-    ids = (
-        cands.select(F.col("id_a").alias("id"))
-        .unionByName(cands.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    old_sh = (
-        dup_docs.select(
-            F.col("doc_id").alias("id"),
-            dedup.word_shingles(F.col("text"), 3).alias("sh"),
-        ).join(ids, "id", "leftsemi")
-    )
-    old = (
-        cands.join(old_sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(old_sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= 0.7)
-        .select("id_a", "id_b", "jaccard")
-    )
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-    assert new.count() > 0  # the pin is vacuous on an empty verify set
-
-
 def test_let_bound_expressions_bit_identical(spark):
     """Every r16 let-binding rewrite (word_shingles, ngram_set,
     ngram_array, repetition_ratio, quality_features, lang_id,

@@ -102,10 +102,12 @@ def test_gate_id_pushdown_paths_identical(spark, lsh17):
 
 
 # ---------------------------------------------------------------- V4
-def test_cc_chain_beyond_max_iter_now_exact(spark):
+def test_cc_chain_beyond_max_iter_now_exact(spark, monkeypatch):
     """Pointer-doubling escalation (r17): a 120-diameter chain converges
     to one component under max_iter=50 — the plain form silently
-    returned unconverged labels here (needs 120 rounds)."""
+    returned unconverged labels here (needs 120 rounds). The rounds path
+    is forced: within the edge bound the driver labels it."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
     pairs = spark.range(120).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
@@ -115,10 +117,12 @@ def test_cc_chain_beyond_max_iter_now_exact(spark):
     assert {r["component"] for r in rows} == {0}
 
 
-def test_cc_not_converged_within_max_iter_raises_and_releases(spark):
-    """The same chain with max_iter=3 (plain rounds only) cannot
-    converge: the call raises instead of returning split components,
-    and its checkpoints leave the block manager."""
+def test_cc_not_converged_within_max_iter_raises_and_releases(spark, monkeypatch):
+    """The same chain with max_iter=3 (plain rounds only, forced past
+    the driver path) cannot converge: the call raises instead of
+    returning split components, and its checkpoints leave the block
+    manager."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
     pairs = spark.range(120).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
@@ -132,24 +136,28 @@ def test_cc_not_converged_within_max_iter_raises_and_releases(spark):
     assert snap["n_rdds"] <= base_rdds and snap["n_blocks"] <= base_blocks, snap
 
 
-def test_cc_doubling_identical_to_plain_on_converging_graph(spark):
+def test_cc_doubling_identical_to_plain_on_converging_graph(spark, monkeypatch):
     """On graphs where the plain form converges (hop_after > diameter),
-    the escalated form returns bit-identical rows."""
+    the escalated form returns bit-identical rows — and so does the
+    driver path."""
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 20), (30, 11), (40, 41), (41, 42)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     with lifecycle.checkpoint_scope():
+        c = sorted(map(tuple, dedup.connected_components(pairs).collect()))
+        monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
         a = sorted(map(tuple, dedup.connected_components(pairs, hop_after=10**6).collect()))
         b = sorted(map(tuple, dedup.connected_components(pairs, hop_after=0).collect()))
-        c = sorted(map(tuple, dedup.connected_components(pairs).collect()))
     assert a == b == c
     assert a == [
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (30, 10), (40, 40), (41, 40), (42, 40),
     ]
 
 
-def test_cc_string_ids_with_hop(spark):
+def test_cc_string_ids_with_hop(spark, monkeypatch):
     """The join convergence detector (non-numeric ids) composes with the
-    hop: string-id chain longer than hop_after resolves exactly."""
+    hop: string-id chain longer than hop_after resolves exactly on the
+    (forced) rounds path."""
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 0)
     pairs = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(20)], "id_a string, id_b string"
     )

@@ -107,34 +107,27 @@ def test_release_barrier_sees_checkpoint_behind_subquery(spark):
 def test_clean_corpus_sibling_cache_blocks_release(spark, docs_path):
     """The barrier at operator level: cache one clean_corpus result
     inside the scope — the shared gate checkpoint must survive the
-    scope's exit until the cache is unpersisted. The scope's yielded
-    list is the ledger of its pins, so the caller can free the
-    survivors afterwards."""
+    scope's exit until the cache is unpersisted. The kept pins pass to
+    the outer scope, which frees them once the cache is gone."""
     from elephant_twin_spark.operators.pipeline import clean
 
     docs = spark.read.parquet(docs_path).limit(200)
-    released_after = None
-    try:
-        with lifecycle.checkpoint_scope() as pins:
-            cleaned, audit = clean.clean_corpus(
-                docs, "text", "doc_id", min_tokens=10, allowed_langs=("en",),
-                num_perm=16, num_bands=4,
-            )
-            cleaned.cache()
-            n_clean = cleaned.count()
-            assert 0 < n_clean < 200
-        # the gate checkpoint is shared; the sibling cache kept it
-        assert any(is_live(p) for p in pins)
-        assert cleaned.count() == n_clean  # cache intact and serving
-        assert audit.count() == 200
-    finally:
-        released_after = _final_cleanup(
-            lambda: (
-                cleaned.unpersist(True),
-                [lifecycle.release(p) for p in pins],
-            )[1]
-        )
-    assert any(released_after)
+    with lifecycle.checkpoint_scope():
+        try:
+            with lifecycle.checkpoint_scope() as pins:
+                cleaned, audit = clean.clean_corpus(
+                    docs, "text", "doc_id", min_tokens=10, allowed_langs=("en",),
+                    num_perm=16, num_bands=4,
+                )
+                cleaned.cache()
+                n_clean = cleaned.count()
+                assert 0 < n_clean < 200
+            # the gate checkpoint is shared; the sibling cache kept it
+            assert any(is_live(p) for p in pins)
+            assert cleaned.count() == n_clean  # cache intact and serving
+            assert audit.count() == 200
+        finally:
+            _final_cleanup(lambda: cleaned.unpersist(True))
     assert not any(is_live(p) for p in pins)
 
 

@@ -2,7 +2,8 @@
 key-generic in r11 for the recurring ritual).
 
 Runs the named keys N reps each in ONE JVM with bench.py's exact
-warm-up and prints per-rep timings — the house discipline for deciding
+warm-up and prints per-rep wall time and CPU seconds (the JVM's plus
+the driver process's) — the house discipline for deciding
 "box noise vs real regression" on a shared-bench riser. Builds get a
 FRESH index_root per rep (each rep is a genuine cold build; rep 1 still
 shows first-touch effects vs the steady later reps).
@@ -76,16 +77,26 @@ def main():
     )
 
     results: dict[str, list[float]] = {}
+    cpu: dict[str, list[float]] = {}
+    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
+
+    def cpu_s() -> float:
+        """CPU seconds so far of the JVM and this driver process."""
+        with open(f"/proc/{jvm_pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        jvm = (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+        return jvm + sum(os.times()[:2])
 
     def reps(name, fn, n=5):
-        ts = []
+        ts, cs = [], []
         for i in range(n):
-            t0 = time.perf_counter()
+            c0, t0 = cpu_s(), time.perf_counter()
             with lifecycle.checkpoint_scope():
                 fn(i)
             ts.append(round(time.perf_counter() - t0, 3))
-        results[name] = ts
-        print(f"{name}: {ts}", file=sys.stderr, flush=True)
+            cs.append(round(cpu_s() - c0, 2))
+        results[name], cpu[name] = ts, cs
+        print(f"{name}: wall_s {ts} cpu_s {cs}", file=sys.stderr, flush=True)
 
     # shared query-side state, built lazily only for keys that need it
     _state: dict = {}
@@ -231,7 +242,7 @@ def main():
     for k in KEYS:
         reps(k, KEY_FNS[k])
 
-    print(json.dumps(results))
+    print(json.dumps({"wall_s": results, "cpu_s": cpu}))
     spark.stop()
 
 
