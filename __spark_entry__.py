@@ -3067,7 +3067,8 @@ _ROTATION_PINS: list = [
     "containment_pairs", "repetition_ratio", "chunk_docs",
     "ngram_jaccard_pairs",
     # r17 hot-path changes (gate id pushdown + bloom fallback, CC
-    # pointer doubling, scd2_merge validated-probe pin)
+    # pointer doubling, scd2_merge validated-probe pin); lsh_gate and
+    # cluster_refresh now also run the gate's driver path
     "lsh_gate", "cluster_refresh", "near_dup_components",
     "scd2_merge_incremental",
     # r17 build-path normalize-after-group (zones_for/bloom_sketch_for;

@@ -10,15 +10,16 @@ Layout:
 
     {idx_dir}/bands/      — (id, band, band_hash), range-partitioned by
                             band_hash (parquet min/max skips non-matching
-                            files at probe time)
+                            files and row groups at probe time)
     {idx_dir}/index.json  — descriptor (files, checksums, LSH params)
 
 Probing cost is proportional to the *incoming batch*, not the corpus:
-the batch's bands shuffle-join against the bucket table on
-(band, band_hash); only colliding buckets produce candidate pairs, and
-only candidates are verified with exact Jaccard against the corpus text
-(a semi-join-shaped read of the source table — the candidates' corpus
-ids are a small set, so the verify read is bounded).
+only buckets the batch's bands collide with are read, and only the
+colliding corpus docs are verified with exact Jaccard against their
+text. A probe-sized gate runs that filter-then-verify on the driver
+from three ``IN``-pruned bounded collects and returns a plain
+projection of the batch; above the bounds it runs as distributed joins
+behind a checkpoint (see :meth:`LshIndex.gate`).
 
 Parameters (num_perm/num_bands/shingle_k/hash_fn) are frozen in the
 descriptor: a probe MUST hash with the build's parameters or buckets
@@ -27,15 +28,19 @@ rather than trusting the caller.
 
 Reference analog: none (north-star extension) — but the shape is the
 same as `core/indexing/AbstractBlockIndexingJob.java` postings: a
-key→bucket table consulted before touching the base data.
+key→bucket table consulted before touching the base data, planned in
+the client.
 """
 
 from __future__ import annotations
 
+import re
+from collections import defaultdict
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from elephant_twin_spark.operators import build as build_mod, lifecycle
 from elephant_twin_spark.operators.pipeline import dedup
@@ -46,6 +51,11 @@ from elephant_twin_spark.sources import catalog, fsio
 #: probe keys at ~2% false-positive rate with 3 hash lanes
 _BLOOM_BITS = 1 << 20
 _BLOOM_HASHES = 3
+
+#: Probe budget in band rows: the default size of
+#: :meth:`LshIndex.candidate_pairs`' ``IN`` list, and the largest probe
+#: :meth:`LshIndex.gate` handles on the driver
+_IN_LIST_ROWS = 4096
 
 
 def _bloom_prefilter(probe: DataFrame, corpus: DataFrame, key_col: str) -> DataFrame:
@@ -101,6 +111,25 @@ def _bloom_prefilter(probe: DataFrame, corpus: DataFrame, key_col: str) -> DataF
         for i in range(_BLOOM_HASHES)
     )
     return corpus.crossJoin(F.broadcast(bits_df)).where(F.expr(cond)).drop("_bf_bits")
+
+
+def _with_dup_of(docs: DataFrame, id_col: str, dup_of: dict) -> DataFrame:
+    """``docs`` with the ``dup_of`` and ``is_near_dup`` columns of
+    :meth:`LshIndex.gate`'s driver path, from its ``{probe id: dup_of}``
+    map: a lookup in a map literal, so the plan gains no join and no
+    exchange. ``id_col`` comes first, as in the distributed path's
+    ``USING`` join."""
+    id_type = docs.schema[id_col].dataType
+    if dup_of:
+        lookup = F.create_map(
+            *[F.lit(x) for kv in sorted(dup_of.items()) for x in kv]
+        ).cast(MapType(id_type, id_type))[F.col(id_col)]
+    else:
+        lookup = F.lit(None).cast(id_type)
+    rest = [f"`{c.replace('`', '``')}`" for c in docs.columns if c != id_col]
+    return docs.select(id_col, *rest, lookup.alias("dup_of")).withColumn(
+        "is_near_dup", F.col("dup_of").isNotNull()
+    )
 
 
 def banded_docs(
@@ -265,57 +294,34 @@ class LshIndex:
         text_col: str,
         id_col: str,
         probe_sigs: Optional[DataFrame] = None,
-        pushdown_limit: int = 4096,
+        pushdown_limit: int = _IN_LIST_ROWS,
     ) -> DataFrame:
         """``(probe_id, corpus_id)`` — incoming docs sharing any LSH
-        bucket with a corpus doc. The join key (band, band_hash) carries
-        the probe side (small) against the bucket table (big, but
-        min/max-pruned by the range layout); same-id collisions are kept
-        out so re-probing the corpus against itself is meaningful.
-        ``probe_sigs``: precomputed signatures for ``docs`` (this
-        index's parameters), shared by callers that also band the same
-        batch elsewhere (the streaming gate).
+        bucket with a corpus doc, as a distributed join on (band,
+        band_hash) of the probe's bands against the bucket table; the
+        bucket join of :meth:`gate`'s distributed path. Same-id
+        collisions are kept out, so re-probing the corpus against itself
+        is meaningful. ``probe_sigs``: precomputed signatures for
+        ``docs`` (this index's parameters), so a caller that also uses
+        them elsewhere bands the batch from one shingle pass.
 
-        Band-hash pushdown (r16): the docstring has always CLAIMED the
-        range layout min/max-prunes the bucket table, but an equi-join
-        never reaches the scan as a pushable predicate (dynamic
-        partition pruning only fires on partition columns). The probe's
-        distinct band hashes are therefore collected — bounded by
-        |probe| × num_bands, the same probe-proportional budget as
-        every other bounded collect in this engine — and applied as an
-        ``IN`` filter, which lands in the parquet scan's PushedFilters
-        and skips whole index files via their range-partitioned min/max
-        footers. Probes with more than ``pushdown_limit`` distinct
-        hashes fall back to a Bloom pre-filter (r17, below);
-        ``pushdown_limit=0`` disables the probe outright.
+        The bucket table is pruned before the join. An equi-join never
+        reaches the scan as a pushable predicate, so the probe's
+        distinct band hashes are collected (at most ``pushdown_limit``,
+        a probe-proportional budget) and applied as an ``IN`` filter,
+        which lands in the bucket scan's PushedFilters and skips files
+        and row groups by their range-partitioned min/max footers. A
+        probe with more distinct hashes row-prunes the bucket table with
+        a Bloom prefilter instead (:func:`_bloom_prefilter`; false
+        positives only, which the equi-join removes).
+        ``pushdown_limit=0`` disables both and keeps the method lazy.
+        Rows are identical on every path.
 
-        Bloom fallback above the limit (r17; guide §3 "pre-filter the
-        big side"): a probe with >``pushdown_limit`` distinct hashes
-        previously kept the plain unpruned join SILENTLY — the exact
-        failure the pushdown exists to prevent. File-level pruning is
-        genuinely dead there (xxhash64 band hashes are uniform, so
-        >4096 of them land in every range-partitioned file), but ROW
-        pruning is not: the probe's hashes are folded into a Bloom
-        bitmap of a fixed 2^20 bits ≈ 128 KiB (one extra aggregate over
-        the already-pinned probe band table) and tested
-        against every bucket row BEFORE the join, so when the probe
-        side outgrows broadcast range the corpus side sheds ~all
-        non-colliding rows before the sort-merge exchange instead of
-        shuffling the whole bucket table. False positives only — the
-        equi-join removes them, so rows out are identical on every
-        path (pinned in tests/test_r17_optimization.py).
-
-        The probe band table is pinned (``localCheckpoint``) before the
-        collect: the pushdown's ``take`` is an action over the probe's
-        minhash+banding subtree, and without the pin the bucket join
-        below re-evaluates that whole subtree a second time. Pinning is
-        probe-proportional (|probe| × num_bands rows) and only happens
-        on the pushdown path, where an action runs anyway —
-        ``pushdown_limit=0`` keeps the method fully lazy as before.
-
-        Lifecycle: on the pushdown path the result is checkpoint-backed
-        — consume it inside your ``checkpoint_scope`` (see
-        :mod:`.lifecycle`)."""
+        With ``pushdown_limit > 0`` the probe band table is pinned
+        (``localCheckpoint``) before the hash collect, so the join does
+        not evaluate the probe's banding a second time, and the result
+        is checkpoint-backed — consume it inside your
+        ``checkpoint_scope`` (see :mod:`.lifecycle`)."""
         probe = self._probe_bands(
             docs, text_col, id_col, probe_sigs=probe_sigs
         ).withColumnsRenamed({"id": "probe_id"})
@@ -347,47 +353,54 @@ class LshIndex:
         probe_sigs: Optional[DataFrame] = None,
         id_pushdown_limit: int = 4096,
     ) -> DataFrame:
-        """The ingest gate: incoming docs annotated with
-        ``is_near_dup`` and ``dup_of`` (lowest matching corpus id, null
-        when novel). Candidates from bucket collisions only; exact
-        shingle-Jaccard verification runs on candidates only, against
-        just the candidate corpus docs (semi-join-bounded read).
+        """The ingest gate: ``docs`` annotated with ``dup_of`` (lowest
+        corpus id whose shingle Jaccard with the doc is at least
+        ``threshold``, null when novel) and ``is_near_dup``. Only corpus
+        docs sharing an LSH bucket with the doc are verified, against
+        just those docs' text. Columns: ``id_col``, the other ``docs``
+        columns, ``dup_of``, ``is_near_dup``.
 
         ``extra_corpus`` (same ``id_col``/``text_col`` names as the
         probe) supplies verification text for documents whose bands were
         :meth:`append_docs`-ed after the build — the index stores only
         buckets, never text, so grown docs verify against wherever their
         text was accepted to (one id space across all corpus sources).
-        ``probe_sigs``: see :meth:`candidate_pairs`; here it must also
-        carry each probe's ``sh`` shingle column (the streaming gate's
-        pinned batch signatures do), which the Jaccard check reads
-        instead of shingling the probe again.
+        ``probe_sigs``: the carried-shingle signatures of ``docs``
+        (``minhash_signatures`` lanes plus the ``sh`` column, this
+        index's parameters), as the streaming gate pins them once per
+        batch. Without it the gate builds them itself; either way each
+        probe is shingled once, for its bands and its Jaccard check.
 
-        The candidate table is pinned (``localCheckpoint``) before use:
-        it feeds BOTH the corpus-id collect and the verify join, and
-        without the pin Spark evaluates the whole candidate subtree
-        — probe banding plus the bucket-table scan and join — once per
-        consumer. The pin is probe-bounded (|probe| × bucket
-        collisions); at 100 TB it is the difference between scanning
-        the pruned bucket table once or twice per gate call. Same
-        rows out (A/B on the bench key: steady gate JVM CPU 11.4-12.2 →
-        8.6-8.9 s/rep, same plan otherwise).
+        Two paths, one answer:
 
-        ``id_pushdown_limit``: cap on the candidate-row collect (rows
-        bound distinct ids from above, and a row take() over the pinned
-        candidates is a narrow job — no shuffle). Within the cap the
-        verification read is pruned by an ``IN`` predicate in the
-        corpus scan's PushedFilters; above it (a hot bucket on a
-        duplicate-heavy corpus can make the candidate set corpus-scale)
-        the gate falls back to a plain semi join sized by the planner.
-        ``0`` disables the collect outright. Results are identical on
-        every path.
+        - **Driver**, when the work is probe-sized: the probe has at
+          most ``_IN_LIST_ROWS`` band rows, the colliding bucket rows
+          number at most ``id_pushdown_limit``, and the probe, bucket
+          and corpus ids (``extra_corpus`` too) share one integral,
+          ``decimal(p,0)`` or string type, whose Python equality and
+          order are Spark's. Three bounded collects, one job each: the
+          probe's ``(id, sh, band hashes)``; the colliding bucket rows,
+          read with an ``IN`` on the band hashes; the candidates'
+          corpus shingles, read with an ``IN`` on their ids. Both ``IN``
+          filters land in the scans' PushedFilters, where min/max
+          footers skip row groups. The bucket join and the Jaccard
+          check run on the driver; k / (|A|+|B|−k) over the
+          duplicate-free shingle arrays gives the same integers and the
+          same double as :func:`dedup.shingle_jaccard`. ``dup_of`` is a
+          lookup in a map literal, so the returned plan is a projection
+          of ``docs``: no join, no exchange, no checkpoint, usable after
+          any scope exits.
+        - **Distributed**, above any bound or for other id types:
+          :meth:`candidate_pairs`, pinned (``localCheckpoint``) because
+          it feeds both the candidate-id collect and the verify join.
+          Within ``id_pushdown_limit`` candidate rows (a narrow
+          ``take`` over the pin) the corpus read is pruned by an ``IN``
+          on the candidate ids; above it a semi join sized by the
+          planner prunes it. The result is checkpoint-backed — consume
+          it inside your ``checkpoint_scope`` (see :mod:`.lifecycle`).
 
-        Lifecycle: the result is checkpoint-backed — consume it inside
-        your ``checkpoint_scope`` (see :mod:`.lifecycle`)."""
-        cands = lifecycle.pin(
-            self.candidate_pairs(docs, text_col, id_col, probe_sigs=probe_sigs)
-        )
+        ``id_pushdown_limit=0`` disables the bounded collects: the
+        distributed path with the semi join."""
         corpus = fsio.read_parquet(self.spark, self.table_path).select(
             F.col(self.id_column).alias("corpus_id"),
             F.col(self.text_column).alias("_ctext"),
@@ -398,35 +411,23 @@ class LshIndex:
                     F.col(id_col).alias("corpus_id"), F.col(text_col).alias("_ctext")
                 )
             )
-        if probe_sigs is None:
-            probe_sh = docs.select(
-                F.col(id_col).alias("probe_id"),
-                dedup.word_shingles(F.col(text_col), self.shingle_k).alias("sh_a"),
+        sigs = probe_sigs
+        if sigs is None:
+            sigs = dedup._shingled_signatures(
+                docs, text_col, id_col, self.num_perm, self.shingle_k, self.hash_fn
             )
-        else:
-            probe_sh = probe_sigs.select(
-                F.col("id").alias("probe_id"), F.col("sh").alias("sh_a")
+        if id_pushdown_limit > 0:
+            dup_of = self._driver_dup_of(
+                docs, id_col, sigs, corpus, threshold, id_pushdown_limit
             )
-        # Bounded candidate-id pushdown (r17; supersedes the r16
-        # unconditional F.broadcast, whose hint bypassed
-        # autoBroadcastJoinThreshold on a set that a hot bucket can make
-        # corpus-scale — r16 advisor). The id set is collected only up
-        # to ``id_pushdown_limit``; within the bound the IN predicate
-        # reaches the corpus parquet scan as PushedFilters, so the
-        # verification read prunes row groups / files by footer min-max
-        # instead of post-filtering a full (id, text) scan — the same
-        # §6 shape as candidate_pairs' band-hash pushdown. Above the
-        # bound the plain semi join is kept and the planner picks the
-        # strategy from its own size estimates (sort-merge fallback
-        # instead of a forced corpus-scale broadcast).
-        # The bound is checked on candidate ROWS, not distinct ids: a
-        # take() over the pinned (already-materialized) candidate
-        # checkpoint is a NARROW job — no shuffle, first partitions
-        # only — whereas a distinct().take() costs a full 2-stage
-        # shuffle job per gate call (measured +1s wall on the bench
-        # key). Row count bounds distinct count from above, so the
-        # check is safe, just conservative; ids are deduped and sorted
-        # driver-side (deterministic IN list).
+            if dup_of is not None:
+                return _with_dup_of(docs, id_col, dup_of)
+        cands = lifecycle.pin(
+            self.candidate_pairs(docs, text_col, id_col, probe_sigs=sigs)
+        )
+        # bounded on candidate ROWS, not distinct ids: a take() over the
+        # pin is a narrow job, a distinct().take() a shuffle; rows bound
+        # distinct ids from above
         if id_pushdown_limit > 0:
             rows = cands.select("corpus_id").take(id_pushdown_limit + 1)
         else:
@@ -442,6 +443,7 @@ class LshIndex:
             "corpus_id",
             dedup.word_shingles(F.col("_ctext"), self.shingle_k).alias("sh_b"),
         )
+        probe_sh = sigs.select(F.col("id").alias("probe_id"), F.col("sh").alias("sh_a"))
         verified = (
             cands.join(probe_sh, "probe_id")
             .join(corpus_sh, "corpus_id")
@@ -458,6 +460,82 @@ class LshIndex:
             )
             .withColumn("is_near_dup", F.col("dup_of").isNotNull())
         )
+
+    def _driver_dup_of(
+        self,
+        docs: DataFrame,
+        id_col: str,
+        sigs: DataFrame,
+        corpus: DataFrame,
+        threshold: float,
+        bucket_limit: int,
+    ) -> Optional[dict]:
+        """``{probe id: dup_of}`` for :meth:`gate`'s driver path, or
+        None when a bound or the id types send the gate to its
+        distributed path. ``corpus`` is the gate's ``(corpus_id,
+        _ctext)`` relation."""
+        bands = self.bands()
+        types = {
+            dict(docs.dtypes)[id_col],
+            dict(sigs.dtypes)["id"],
+            dict(bands.dtypes)["id"],
+            dict(corpus.dtypes)["corpus_id"],
+        }
+        if len(types) > 1 or not re.fullmatch(dedup._DRIVER_ID_TYPES, types.pop()):
+            return None
+        band_hashes = dedup._band_hash_exprs(self.num_perm, self.num_bands, self.hash_fn)
+        probe = dedup._collect_at_most(
+            # string hashes, as band_table writes them
+            sigs.select("id", "sh", F.array(*[h.cast("string") for h in band_hashes])),
+            _IN_LIST_ROWS // self.num_bands,
+        )
+        if probe is None:
+            return None
+        buckets = defaultdict(set)  # (band, band_hash) -> probe ids
+        probe_sh = defaultdict(list)  # probe id -> (size, set) per probe row
+        for pid, sh, hashes in probe:
+            if pid is None:  # equal to no corpus id, as in the bucket join
+                continue
+            probe_sh[pid].append((len(sh), set(sh)))
+            for band, h in enumerate(hashes):
+                buckets[band, h].add(pid)
+        # one SQL string, where isin() makes a py4j round trip per hash;
+        # band hashes are decimal or hex digits, safe between quotes
+        in_hashes = ", ".join(sorted({f"'{h}'" for _, h in buckets}))
+        rows = dedup._collect_at_most(
+            bands.where(F.expr(f"band_hash IN ({in_hashes})"))
+            .select("id", "band", "band_hash"),
+            bucket_limit,
+        ) if buckets else []
+        if rows is None:
+            return None
+        cands = defaultdict(set)  # corpus id -> colliding probe ids
+        for cid, band, h in rows:
+            for pid in buckets.get((band, h), ()):
+                if cid is not None and pid != cid:
+                    cands[cid].add(pid)
+        corpus_sh = dedup._collect_at_most(
+            corpus.where(F.col("corpus_id").isin(sorted(cands))).select(
+                "corpus_id", dedup.word_shingles(F.col("_ctext"), self.shingle_k)
+            ),
+            bucket_limit,
+        ) if cands else []
+        if corpus_sh is None:
+            return None
+        dup_of: dict = {}
+        for cid, sh in corpus_sh:
+            if sh is None:  # NULL text: its Jaccard is NULL, never a match
+                continue
+            nb, b = len(sh), set(sh)
+            for pid in cands[cid]:
+                if pid in dup_of and dup_of[pid] <= cid:
+                    continue
+                for na, a in probe_sh[pid]:
+                    k = len(a & b)
+                    if k / (na + nb - k) >= threshold:
+                        dup_of[pid] = cid
+                        break
+        return dup_of
 
     def append_docs(
         self,

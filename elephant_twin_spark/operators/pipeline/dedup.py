@@ -176,18 +176,16 @@ def _shingled_signatures(
     )
 
     def lane(i: int) -> Column:
-        # single-argument lambdas only: a 2-arg lambda would be given the
-        # ELEMENT INDEX as its second argument by F.transform
+        # one SQL string per lane: the same lambda built through the
+        # Column API costs ~13 ms of py4j calls per lane, paid on the
+        # driver by every call (a probe-sized gate's largest fixed cost)
         if hash_fn == "xxhash64":
-            h = F.transform("sh", lambda s: F.xxhash64(F.lit(i), s))
+            h = f"xxhash64({i}, s)"
         elif hash_fn == "md5":
-            h = F.transform(
-                "sh",
-                lambda s: F.md5(F.concat(F.lit(str(i) + "|"), s).cast("binary")),
-            )
+            h = f"md5(cast(concat('{i}|', s) as binary))"
         else:
             raise ValueError(hash_fn)
-        return F.array_min(h).alias(f"mh{i}")
+        return F.expr(f"array_min(transform(sh, s -> {h}))").alias(f"mh{i}")
 
     return sh.select("id", *carry_cols, "sh", *[lane(i) for i in range(num_perm)])
 
@@ -621,9 +619,22 @@ _CC_DRIVER_EDGES = 100_000
 # exact integer id types: integral types and decimals of scale 0. Their
 # labels sum exactly in decimal(38,0) (the rounds' convergence probe),
 # and with strings (UTF-8 byte order is code-point order) they are the
-# ids whose Python equality and order match Spark's (the driver path);
-# float and double ids qualify for neither
+# ids whose Python equality and order match Spark's (the driver paths
+# here and in ``LshIndex.gate``); float and double ids qualify for neither
 _EXACT_INT_TYPES = r"tinyint|smallint|int|bigint|decimal\(\d+,0\)"
+_DRIVER_ID_TYPES = _EXACT_INT_TYPES + "|string"
+
+
+def _collect_at_most(df: DataFrame, n: int) -> Optional[list]:
+    """``df``'s rows as tuples when it has at most ``n``, else None —
+    the bounded collect of every driver path. One Spark job: under an
+    Arrow collect, ``limit`` cuts each partition to ``n + 1`` rows and
+    gathers them in one shuffle, where ``take`` scans the partitions in
+    growing rounds, one job per round."""
+    table = df.limit(n + 1).toArrow()
+    if table.num_rows > n:
+        return None
+    return list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 def connected_components(
@@ -644,7 +655,7 @@ def connected_components(
 
     - **Driver**, when the edges number at most ``_CC_DRIVER_EDGES``
       rows and the ids are integral, ``decimal(p,0)`` or string. One
-      bounded ``take`` reads the pinned edges, the pin is freed,
+      bounded collect (:func:`_collect_at_most`) reads the pinned edges, the pin is freed,
       union-find with min-id roots labels them, and the result is a
       local relation with the id column types and no checkpoint behind
       it. Near-dup graphs are this size, and on them the rounds below
@@ -686,7 +697,7 @@ def connected_components(
     round's checkpoint — consume it inside your ``checkpoint_scope``
     (see :mod:`.lifecycle`).
     """
-    # pinned before the bounded take, so a graph above the bound starts
+    # pinned before the bounded collect, so a graph above the bound starts
     # its rounds from these rows instead of evaluating ``pairs`` again
     edges = lifecycle.pin(
         pairs.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
@@ -694,11 +705,9 @@ def connected_components(
         .distinct()
     )
     types = dict(edges.dtypes)
-    if types["s"] == types["d"] and re.fullmatch(
-        _EXACT_INT_TYPES + "|string", types["s"]
-    ):
-        rows = edges.take(_CC_DRIVER_EDGES + 1)
-        if len(rows) <= _CC_DRIVER_EDGES:
+    if types["s"] == types["d"] and re.fullmatch(_DRIVER_ID_TYPES, types["s"]):
+        rows = _collect_at_most(edges, _CC_DRIVER_EDGES)
+        if rows is not None:
             lifecycle.release(edges)
             return _driver_components(
                 pairs.sparkSession, rows, edges.schema["s"].dataType

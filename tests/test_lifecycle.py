@@ -61,10 +61,15 @@ def _scd2_raise(spark):
 
 
 def _gate(spark, idx):
+    from elephant_twin_spark.operators import lsh
+
     probe = spark.createDataFrame(
         [Row(doc_id=100, text=_TEXTS[0] + " again"), Row(doc_id=101, text="novel words here")]
     )
-    return idx.gate(probe, "text", "doc_id", threshold=0.5).where("is_near_dup").count()
+    # the distributed path pins; a probe-sized gate on the driver pins nothing
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lsh, "_IN_LIST_ROWS", 0)
+        return idx.gate(probe, "text", "doc_id", threshold=0.5).where("is_near_dup").count()
 
 
 def _cc_rounds(spark):

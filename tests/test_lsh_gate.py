@@ -55,6 +55,158 @@ def test_gate_exact_copy_always_flagged(spark, lsh_setup):
     assert row["is_near_dup"] and row["dup_of"] == 2
 
 
+# ------------------------------------------- gate: driver vs distributed
+
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank"
+_GATE_CORPUS = [
+    (1, _BASE),
+    (2, _BASE.replace("river", "creek")),  # near 1: dup_of takes the min id
+    (3, "spark shuffles data between stages across the cluster every night"),
+    (4, "completely different content about parquet row groups and footers"),
+    (5, None),
+    (6, "vectorized readers keep whole expressions inside generated code paths"),
+]
+# grown rows: bands appended after the build, text only in extra_corpus
+_GATE_GROWN = [(500, "adaptive execution splits skewed shuffle partitions at runtime")]
+_GATE_PROBE = [
+    (100, _BASE.replace("lazy", "sleepy")),  # near 1 and 2
+    (101, "nothing like anything in the corpus at all here today"),
+    (102, _GATE_CORPUS[2][1]),  # duplicate id: a copy of 3 ...
+    (102, "a second novel text under a repeated probe id value"),  # ... and a novel row
+    (None, _BASE),  # NULL id: matches nothing
+    (103, None),  # NULL text: matches nothing
+    (6, _GATE_CORPUS[5][1]),  # copy of the corpus doc with its own id: not a dup
+    (4, _BASE),  # id of a corpus doc, text of another
+    (104, _GATE_GROWN[0][1]),  # a copy of the grown doc
+]
+_GATE_THRESHOLD = 0.5
+
+
+def _brute_force_gate(probe, corpus, k=2, t=_GATE_THRESHOLD):
+    """Expected ``(id, text, dup_of, is_near_dup)`` rows: exact shingle
+    Jaccard of every probe row against every corpus doc. Every pair
+    above the threshold is a copy or a one-word edit that shares an LSH
+    bucket under both hash functions, so the gate must find exactly
+    these."""
+    import re
+
+    def shingles(text):
+        toks = re.findall(r"\S+", text)
+        if len(toks) < k:
+            return {" ".join(toks)}
+        return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+    best = {}
+    for pid, ptext in probe:
+        if pid is None or ptext is None:
+            continue
+        a = shingles(ptext)
+        for cid, ctext in corpus:
+            b = shingles(ctext) if ctext is not None else None
+            if b and cid != pid and len(a & b) / len(a | b) >= t:
+                best[pid] = min(best.get(pid, cid), cid)
+    return sorted(
+        ((pid, text, best.get(pid), pid in best) for pid, text in probe),
+        key=repr,
+    )
+
+
+@pytest.fixture(scope="module")
+def gate_indexes(spark, workdir):
+    """One corpus, one LSH index per band hash function, each grown by
+    the same appended documents."""
+    corpus_path = f"{workdir}/gate_paths_corpus"
+    spark.createDataFrame(_GATE_CORPUS, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(corpus_path)
+    grown = spark.createDataFrame(_GATE_GROWN, "doc_id long, text string")
+    out = {}
+    for hash_fn in ("xxhash64", "md5"):
+        eng = Engine(spark, f"{workdir}/gate_paths_{hash_fn}")
+        eng.build_lsh_index(corpus_path, "text", "doc_id", hash_fn=hash_fn, **PARAMS)
+        idx = eng.lsh_index(corpus_path, "text")
+        idx.append_docs(grown, "text", "doc_id", batch_tag="t0")
+        out[hash_fn] = idx
+    return out, grown
+
+
+def _run_gate(idx, probe, **kw):
+    """(sorted rows, schema, pinned) of one gate call consumed inside
+    its own checkpoint scope."""
+    from elephant_twin_spark.operators import lifecycle
+
+    with lifecycle.checkpoint_scope() as pins:
+        out = idx.gate(probe, "text", "doc_id", threshold=_GATE_THRESHOLD, **kw)
+        rows = sorted(map(tuple, out.collect()), key=repr)
+    return rows, out.schema, bool(pins)
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_gate_driver_and_distributed_paths_match_brute_force(
+    spark, gate_indexes, hash_fn, monkeypatch
+):
+    """Within the bounds the gate runs on the driver and pins nothing;
+    forced past them (a zero probe budget) it runs the pinned
+    distributed joins. Both paths return the same rows, column names,
+    types and order as a brute-force Jaccard, with and without
+    extra_corpus and probe_sigs. (The semi-join fallback is compared
+    with the other paths in test_r17_optimization.py.)"""
+    from elephant_twin_spark.operators import lsh
+    from elephant_twin_spark.operators.pipeline import dedup
+
+    indexes, grown = gate_indexes
+    idx = indexes[hash_fn]
+    probe = spark.createDataFrame(_GATE_PROBE, "doc_id long, text string")
+    sigs = dedup._shingled_signatures(
+        probe, "text", "doc_id", idx.num_perm, idx.shingle_k, idx.hash_fn
+    )
+    variants = {
+        "plain": ({}, _GATE_CORPUS),
+        "extra_corpus+probe_sigs": (
+            dict(extra_corpus=grown, probe_sigs=sigs), _GATE_CORPUS + _GATE_GROWN
+        ),
+    }
+    for name, (kw, corpus) in variants.items():
+        expected = _brute_force_gate(_GATE_PROBE, corpus)
+        rows, schema, pinned = _run_gate(idx, probe, **kw)
+        assert not pinned, name
+        assert rows == expected, (name, rows)
+        assert schema.names == ["doc_id", "text", "dup_of", "is_near_dup"]
+        with monkeypatch.context() as mp:
+            mp.setattr(lsh, "_IN_LIST_ROWS", 0)
+            d_rows, d_schema, d_pinned = _run_gate(idx, probe, **kw)
+        assert d_pinned and d_rows == rows and d_schema == schema, name
+
+
+def test_gate_mixed_id_types_fall_back_to_distributed(spark, gate_indexes):
+    """int probe ids against a bigint corpus: Python equality would
+    match Spark's here, but the driver path takes only one shared id
+    type, so the gate runs its distributed path, with the same rows."""
+    indexes, _ = gate_indexes
+    probe = spark.createDataFrame(
+        [(i, t) for i, t in _GATE_PROBE if i is not None], "doc_id int, text string"
+    )
+    rows, schema, pinned = _run_gate(indexes["xxhash64"], probe)
+    assert pinned and schema["doc_id"].dataType.simpleString() == "int"
+    expected = _brute_force_gate([p for p in _GATE_PROBE if p[0] is not None], _GATE_CORPUS)
+    assert rows == expected
+
+
+def test_gate_driver_result_outlives_its_scope(spark, gate_indexes):
+    """The driver path's result is a projection of the probe with no
+    checkpoint behind it: it pins nothing and is still readable after
+    the scope it was made in has exited."""
+    from elephant_twin_spark.operators import lifecycle
+
+    indexes, _ = gate_indexes
+    probe = spark.createDataFrame(_GATE_PROBE[:2], "doc_id long, text string")
+    with lifecycle.checkpoint_scope() as pins:
+        out = indexes["xxhash64"].gate(probe, "text", "doc_id", threshold=_GATE_THRESHOLD)
+    assert pins == []
+    got = {r["doc_id"]: r["dup_of"] for r in out.collect()}
+    assert got == {100: 1, 101: None}
+
+
 def test_index_params_come_from_descriptor(spark, lsh_setup):
     eng, corpus_path = lsh_setup
     idx = eng.lsh_index(corpus_path, "text")

@@ -219,15 +219,20 @@ def test_funnel_bounded_state_plan(spark, events):
     assert shuffles and all(s.startswith("user") for s in shuffles), plan
 
 
-def test_lsh_gate_bucket_join_stays_hash_equi_join(spark, workdir):
-    """The LSH ingest gate's probe→bucket join must remain a hash
-    equi-join on (band, band_hash) with a bounded corpus verify read —
-    an id predicate pushed into the scan within id_pushdown_limit
-    (r17), a LeftSemi above it / when disabled — never a nested-loop or
-    cartesian plan (the PLANS.md claim, pinned)."""
+def test_lsh_gate_bucket_join_stays_hash_equi_join(spark, workdir, monkeypatch):
+    """The LSH ingest gate never plans a nested-loop or cartesian join.
+    On the driver path its two reads are pruned by IN filters pushed
+    into the scans (band hashes on the bucket table, candidate ids on
+    the corpus) and the returned plan is a projection with no exchange.
+    On the distributed path (forced by a zero probe budget) the bucket
+    join is a hash equi-join on (band, band_hash), and the corpus read
+    carries an id predicate in its scan within id_pushdown_limit and a
+    LeftSemi above it / when disabled (the PLANS.md claim, pinned)."""
     from pyspark.sql import Row
 
     from elephant_twin_spark.engine import Engine
+    from elephant_twin_spark.operators import lsh
+    from elephant_twin_spark.operators.pipeline import dedup
 
     corpus_path = f"{workdir}/lsh_plan_corpus"
     spark.createDataFrame(
@@ -242,9 +247,27 @@ def test_lsh_gate_bucket_join_stays_hash_equi_join(spark, workdir):
     probe = spark.createDataFrame(
         [Row(doc_id=100, text="the quick brown fox jumps over the lazy cat today")]
     )
-    # r16: the gate pins (localCheckpoint) the candidate table before its
-    # two consumers, so the bucket join is no longer in the RETURNED
-    # gate plan — assert its shape on candidate_pairs' lazy plan instead.
+
+    # driver path: record the plans of its bounded collects
+    reads = []
+    collect = dedup._collect_at_most
+
+    def spy(df, n):
+        reads.append(plan_of(df))
+        return collect(df, n)
+
+    monkeypatch.setattr(dedup, "_collect_at_most", spy)
+    plan = plan_of(idx.gate(probe, "text", "doc_id", threshold=0.5))
+    monkeypatch.undo()
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert len(reads) == 3, reads  # probe, buckets, corpus
+    pushed = ["\n".join(l for l in r.splitlines() if "PushedFilters" in l) for r in reads]
+    assert "In(band_hash" in pushed[1], reads[1]
+    assert "In(doc_id" in pushed[2] or "EqualTo(doc_id" in pushed[2], reads[2]
+
+    # distributed path
+    monkeypatch.setattr(lsh, "_IN_LIST_ROWS", 0)
     cplan = plan_of(idx.candidate_pairs(probe, "text", "doc_id"))
     assert "BroadcastNestedLoopJoin" not in cplan and "CartesianProduct" not in cplan, cplan
     # bucket join: an equi hash join whose keys include band/band_hash
@@ -253,10 +276,9 @@ def test_lsh_gate_bucket_join_stays_hash_equi_join(spark, workdir):
     assert joins, cplan
     plan = plan_of(idx.gate(probe, "text", "doc_id", threshold=0.5))
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
-    # r17: within id_pushdown_limit the corpus verify read is bounded by
-    # an id predicate PUSHED INTO THE SCAN (In(doc_id,…), rendered
-    # EqualTo for a single id), replacing the r16 broadcast LeftSemi;
-    # the scan line carries it in PushedFilters
+    # within id_pushdown_limit the corpus verify read is bounded by an
+    # id predicate pushed into the scan (In(doc_id,…), rendered EqualTo
+    # for a single id)
     scan_lines = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert any(
         ("In(doc_id" in l or "EqualTo(doc_id" in l) for l in scan_lines
